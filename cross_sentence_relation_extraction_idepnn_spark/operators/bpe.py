@@ -36,7 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_parquet_cached, track_cache, track_checkpoint
+from ..session import (
+    local_frame,
+    read_parquet_cached,
+    track_cache,
+    track_checkpoint,
+)
 
 N_MERGES = 6
 
@@ -135,8 +140,8 @@ def bpe_merges(
     Stops early if the vocabulary runs out of adjacent pairs before
     ``n_merges`` (every word reduced to one symbol)."""
     merges, _ = _train(spark, sf_dir, n_merges)
-    return spark.createDataFrame(
-        merges, "merge_idx int, lsym string, rsym string, pair_count bigint"
+    return local_frame(
+        spark, merges, "merge_idx int, lsym string, rsym string, pair_count bigint"
     )
 
 

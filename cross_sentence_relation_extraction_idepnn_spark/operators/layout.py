@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..streaming.events import events_batch
 
 # A production writer sizes the per-dimension bit width from table
@@ -280,7 +281,8 @@ def zonemap_prune(
     (conditional sum over the cross join, not a filter+group)."""
     zs = zorder_files(spark, sf_dir)
     ts = timeorder_files(spark, sf_dir)
-    pdf = spark.createDataFrame(
+    pdf = local_frame(
+        spark,
         [tuple(int(x) for x in p) for p in probes],
         "pred_user int, hour_lo int, hour_hi int",
     )

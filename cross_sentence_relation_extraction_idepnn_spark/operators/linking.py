@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from . import graph_incore
 
 JACCARD_TAU = 0.5
@@ -230,7 +231,8 @@ def connected_components(
         if len(head) <= driver_threshold:
             surfaces = [r[0] for r in head]
             pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-            return nodes.sparkSession.createDataFrame(
+            return local_frame(
+                nodes.sparkSession,
                 _uf_components(surfaces, pairs),
                 schema="surface string, component string",
             )
@@ -238,7 +240,8 @@ def connected_components(
     if n_nodes <= driver_threshold:
         surfaces = [r[0] for r in nodes.select("surface").collect()]
         pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-        return nodes.sparkSession.createDataFrame(
+        return local_frame(
+            nodes.sparkSession,
             _uf_components(surfaces, pairs),
             schema="surface string, component string",
         )
@@ -342,10 +345,12 @@ def canonicalize(mentions: DataFrame) -> DataFrame:
     ``PY_EDGE_MAX_NODES`` surfaces the bigram-Jaccard edges are
     computed driver-side too (exact twin of the NLJ path, pinned by
     ``test_py_edge_twin_matches_spark_paths``), so the whole
-    canonical map costs a single Spark job. Larger vocabularies keep
-    the Spark NLJ / ppjoin edge builders and, above
-    ``DRIVER_CC_MAX_NODES``, the distributed large/small-star CC —
-    the 100 TB path is unchanged."""
+    canonical map costs a single Spark job. The in-core map comes back
+    as a JVM ``LocalRelation`` (``session.local_frame``), so the
+    broadcast that re-keys triples against it runs no Python worker
+    task. Larger vocabularies keep the Spark NLJ / ppjoin edge
+    builders and, above ``DRIVER_CC_MAX_NODES``, the distributed
+    large/small-star CC — the 100 TB path is unchanged."""
     nodes = mentions.select("surface").distinct()
     head = nodes.limit(DRIVER_CC_MAX_NODES + 1).collect()
     if len(head) > DRIVER_CC_MAX_NODES:
@@ -359,8 +364,10 @@ def canonicalize(mentions: DataFrame) -> DataFrame:
     else:
         edges = similarity_edges(nodes, n_nodes=n)
         pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-    return mentions.sparkSession.createDataFrame(
-        _uf_components(surfaces, pairs), schema="surface string, component string"
+    return local_frame(
+        mentions.sparkSession,
+        _uf_components(surfaces, pairs),
+        "surface string, component string",
     )
 
 
@@ -503,7 +510,8 @@ def canonicalize_incremental(
     if len(head) <= driver_threshold:
         nhead = news.limit(driver_threshold + 1 - len(head)).collect()
         if len(head) + len(nhead) <= driver_threshold:
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 _py_incremental(
                     {r[0]: r[1] for r in head}, [r[0] for r in nhead], tau
                 ),
@@ -776,9 +784,7 @@ def kg_pagerank(
                 iters,
                 PAGERANK_SCALE,
             )
-            return kg.sparkSession.createDataFrame(
-                rows, "node string, pr bigint"
-            )
+            return local_frame(kg.sparkSession, rows, "node string, pr bigint")
         nodes = track_cache(
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1217,9 +1223,7 @@ def kg_communities(
             rows = graph_incore.lpa(
                 [(r.subj, r.obj) for r in base.collect()], iters
             )
-            return kg.sparkSession.createDataFrame(
-                rows, "node string, label string"
-            )
+            return local_frame(kg.sparkSession, rows, "node string, label string")
         directed = base.select(
             F.col("subj").alias("src"), F.col("obj").alias("dst")
         ).filter(F.col("src") != F.col("dst"))
@@ -1604,7 +1608,7 @@ def kg_paths(
             rows = graph_incore.bfs_layers(
                 [(r.subj, r.obj) for r in edges.collect()], max_hops
             )
-            return spark.createDataFrame(rows, "node string, dist int")
+            return local_frame(spark, rows, "node string, dist int")
         hub = (
             edges.groupBy("subj")
             .agg(F.count("*").alias("deg"))
@@ -1613,9 +1617,9 @@ def kg_paths(
             .collect()
         )
         if not hub:
-            return spark.createDataFrame([], "node string, dist int")
-        dist = spark.createDataFrame(
-            [(hub[0]["subj"], 0)], "node string, dist int"
+            return local_frame(spark, [], "node string, dist int")
+        dist = local_frame(
+            spark, [(hub[0]["subj"], 0)], "node string, dist int"
         ).localCheckpoint(eager=release)
         frontier = dist
         prev = dist
@@ -1736,7 +1740,8 @@ def kg_kcore(
             rows = graph_incore.kcore(
                 [(r.src, r.dst) for r in edges.collect()], k, rounds
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [
@@ -1891,7 +1896,8 @@ def kg_walks(
                 length,
                 max_nbrs,
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [
@@ -2474,9 +2480,7 @@ def kg_ppr(
                 PAGERANK_SCALE,
                 n_seeds,
             )
-            return kg.sparkSession.createDataFrame(
-                rows, "node string, ppr bigint"
-            )
+            return local_frame(kg.sparkSession, rows, "node string, ppr bigint")
         outdeg = track_cache(
             edges.groupBy("src").agg(F.count("*").alias("deg"))
             .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2665,7 +2669,8 @@ def kg_ktruss(
             rows = graph_incore.ktruss(
                 [(r.u, r.v) for r in und.collect()], k, rounds
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..hashing import duck_h15, spark_h15
-from ..session import read_parquet_cached
+from ..session import local_frame, read_parquet_cached
 
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "and", "of", "fast"),
@@ -451,7 +451,8 @@ def quality_bands(
     ranged = ranged_by(base, n_ranges, "lang", "q_e6", "doc_id")
     counts = ranged.groupBy("pid", "lang").agg(F.count("*").alias("cnt")).collect()
     if not counts:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "lang string, band int, n_docs bigint, "
             "min_q_e6 bigint, max_q_e6 bigint",

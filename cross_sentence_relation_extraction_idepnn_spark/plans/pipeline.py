@@ -169,10 +169,11 @@ def scored_from_shared(
             candidate_windows(cands, sents), weights=weights, tokenizer=tokenizer
         )
 
-    if weights is not load_weights():
-        return build()  # caller-supplied weights: id not GC-stable
+    # the entry holds the weights object, so its id stays unique
     return input_plan_memo(
-        ("scored_from_shared", max_k, salted, tokenizer), (sents, mens), build
+        ("scored_from_shared", max_k, salted, tokenizer),
+        (sents, mens, weights),
+        build,
     )
 
 

@@ -3,13 +3,21 @@
 Local mode stands in for a multi-executor cluster; all knobs below are
 the ones that matter at 100 TB too (AQE, skew-join splitting, Arrow
 batch sizing for the pandas-UDF kernels).
+
+Driver-built tables go through :func:`local_frame`: it is the only
+``createDataFrame`` call in the package. A list of rows handed to
+``createDataFrame`` analyzes to a ``LogicalRDD`` whose every scan runs
+Python worker tasks (a second worker pool next to the ``mapInPandas``
+kernels) just to unpickle the rows; the Arrow table ``local_frame``
+builds analyzes to a JVM ``LocalRelation`` that needs no task at all.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -54,6 +62,33 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """A driver-side table (``rows``: tuples in ``schema`` column
+    order; ``schema``: DDL string or ``StructType``) as a DataFrame
+    over a JVM ``LocalRelation``.
+
+    The rows travel as one Arrow table, so scanning or broadcasting
+    the result runs no Python worker: the dimension tables the KG path
+    builds on the driver (alias dictionary, canonical entity map)
+    otherwise cost a ``parallelize`` PythonRDD stage per query and a
+    second Python worker pool. NULLs and the declared types (nullability
+    included) are kept; empty ``rows`` give the declared schema. Tables
+    above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB)
+    are spread as a JVM RDD instead — still without Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # ---------------------------------------------------- parquet reader memo
 
 _READER_CACHE: dict[tuple[str, str], "object"] = {}
@@ -67,8 +102,7 @@ def read_parquet_cached(spark: SparkSession, path: str):
     build — measured round 4, this was a third of the cold plan-build
     cost. DataFrames are immutable, so reuse is safe for static
     inputs; callers that REWRITE a path mid-session (none of the
-    shipped operators do) must bypass the memo or call
-    ``invalidate_parquet_cache``."""
+    shipped operators do) must call ``invalidate_parquet_cache``."""
     key = (spark.sparkContext.applicationId, path)
     df = _READER_CACHE.get(key)
     if df is None:
@@ -80,17 +114,39 @@ def read_parquet_cached(spark: SparkSession, path: str):
 
 
 def invalidate_parquet_cache(path: str | None = None) -> None:
-    """Drop memoized readers (all, or those for one path)."""
+    """Drop memoized readers (all, or those for one path) together with
+    every memoized plan built on them, so the next build re-lists the
+    rewritten files. A plan is built on ``path`` when its input files
+    lie under it; an entry whose plan can no longer be analyzed (its
+    session is gone) is dropped too."""
     if path is None:
         _READER_CACHE.clear()
+        _PLAN_CACHE.clear()
         return
     for k in [k for k in _READER_CACHE if k[1] == path]:
         del _READER_CACHE[k]
+    root = os.path.abspath(path)
+    for k in [k for k, (df, _) in _PLAN_CACHE.items() if _scans_under(df, root)]:
+        del _PLAN_CACHE[k]
+
+
+def _scans_under(df, root: str) -> bool:
+    from urllib.parse import urlparse
+
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return True
+    return any(
+        p == root or p.startswith(root + "/")
+        for p in (urlparse(f).path for f in files)
+    )
 
 
 # ---------------------------------------------------- lazy plan memo (r6)
 
-_PLAN_CACHE: dict[tuple, "object"] = {}
+# key → (lazy plan, the inputs it was built from)
+_PLAN_CACHE: dict[tuple, tuple] = {}
 
 
 def input_plan_memo(key: tuple, inputs: tuple, build):
@@ -101,9 +157,11 @@ def input_plan_memo(key: tuple, inputs: tuple, build):
     lifetime. Because upstream sources are themselves memoized
     (``read_parquet_cached`` → ``transcripts`` → ``segment`` → ...),
     identical query text converges on identical input objects and the
-    whole prefix chain is built exactly once per session. Same
-    contract as :func:`plan_memo`: the memo holds a LAZY plan, never
-    data — every action recomputes from parquet."""
+    whole prefix chain is built exactly once per session. Inputs need
+    not be DataFrames (weights dicts ride along the same way); the
+    first one must be. Same contract as :func:`plan_memo`: the memo
+    holds a LAZY plan, never data — every action recomputes from
+    parquet."""
     app = inputs[0].sparkSession.sparkContext.applicationId
     k = (app,) + tuple(key) + tuple(id(x) for x in inputs)
     entry = _PLAN_CACHE.get(k)
@@ -129,13 +187,13 @@ def plan_memo(spark: SparkSession, key: tuple, build):
     memo holds a query plan, not data). Callers must include every
     non-default parameter in ``key``."""
     k = (spark.sparkContext.applicationId,) + tuple(key)
-    df = _PLAN_CACHE.get(k)
-    if df is None:
+    entry = _PLAN_CACHE.get(k)
+    if entry is None:
         if len(_PLAN_CACHE) > 512:
             _PLAN_CACHE.clear()
-        df = build()
-        _PLAN_CACHE[k] = df
-    return df
+        entry = (build(), ())
+        _PLAN_CACHE[k] = entry
+    return entry[0]
 
 
 # ------------------------------------------------- operator cache registry

@@ -35,9 +35,6 @@ def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_cached(spark, f"{sf_dir}/documents.parquet")
 
 
-_FANOUT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents scan, repartitioned iff under-parallel.
 
@@ -46,11 +43,11 @@ def _fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize the whole turn derivation into one task (measured:
     1.2 s of a 7.7 s sf0.1 run). A production corpus has
     >> parallelism file splits, so the repartition (and its shuffle of
-    the raw text) never triggers there. Memoized — the partition-count
-    probe costs an RDD conversion."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _FANOUT_CACHE.get(key)
-    if df is None:
+    the raw text) never triggers there. Plan-memoized — the
+    partition-count probe costs an RDD conversion."""
+    from ..session import plan_memo
+
+    def build() -> DataFrame:
         df = documents(spark, sf_dir)
         par = spark.sparkContext.defaultParallelism
         n = df.rdd.getNumPartitions()
@@ -59,10 +56,9 @@ def _fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         # artificially slow the scaling block's low side)
         if n < max(par // 2, 2) and par > n:
             df = df.repartition(par, "doc_id")
-        if len(_FANOUT_CACHE) > 64:
-            _FANOUT_CACHE.clear()
-        _FANOUT_CACHE[key] = df
-    return df
+        return df
+
+    return plan_memo(spark, ("fanned_documents", sf_dir), build)
 
 
 def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

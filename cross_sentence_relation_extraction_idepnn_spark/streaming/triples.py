@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import MAX_K, SCORE_THRESHOLD
+from ..session import local_frame
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -325,7 +326,7 @@ def run_stream_kg(
         elif canon is not None:
             prev = canon.select("surface", "component")
         else:
-            prev = spark.createDataFrame([], CANON_SCHEMA)
+            prev = local_frame(spark, [], CANON_SCHEMA)
         surfaces = detect_mentions(spark, segment(bdf)).select("surface")
         ext = canonicalize_incremental(prev, surfaces).select(
             "surface", "component"

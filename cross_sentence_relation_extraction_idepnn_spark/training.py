@@ -349,9 +349,13 @@ def train_full(
 
 
 def save_weights(weights: dict[str, np.ndarray], path: str = ARTIFACT) -> None:
+    """Write ``weights`` to ``path`` and drop its ``load_weights``
+    memo: the next load returns the new arrays as a new object, so
+    plans memoized on the old weights are not handed out again."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(kernels.weights_to_lists(weights), f)
+    _WEIGHTS_CACHE.pop(path, None)
 
 
 _WEIGHTS_CACHE: dict[str, dict] = {}

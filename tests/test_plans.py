@@ -81,6 +81,49 @@ def test_alias_dictionary_join_is_broadcast(spark, sf_dir):
     assert "BroadcastExchange" in plan
 
 
+def test_kg_path_driver_tables_are_local_relations(spark, sf_dir):
+    """The alias dictionary and the canonical entity map are built on
+    the driver; as ``LocalRelation``s they scan without a PythonRDD
+    stage. ``Scan ExistingRDD`` in these un-executed plans means a
+    driver-built table went back to the Python-row path."""
+    from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
+        canonicalize,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
+        _materialize_kg_fresh,
+    )
+
+    # one at a time: _materialize_kg_fresh persists the memoized
+    # mention table, after which its plan shows only the cache scan
+    mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
+    assert "Scan ExistingRDD" not in plan_of(mens)
+    assert "Scan ExistingRDD" not in plan_of(canonicalize(mens))
+    assert "Scan ExistingRDD" not in plan_of(_materialize_kg_fresh(spark, sf_dir))
+
+
+def test_create_dataframe_only_inside_local_frame():
+    import ast
+    import pathlib
+
+    from cross_sentence_relation_extraction_idepnn_spark import session
+
+    src = pathlib.Path(session.__file__)
+    hits = [
+        (p.name, i)
+        for p in sorted(src.parent.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    fn = next(
+        n
+        for n in ast.parse(src.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    assert [(name, fn.lineno <= i <= fn.end_lineno) for name, i in hits] == [
+        ("session.py", True)
+    ]
+
+
 def test_similarity_query_side_is_broadcast(spark, sf_dir):
     plan = plan_of(similarity.cosine_topk(spark, sf_dir))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
