@@ -90,14 +90,16 @@ def _candidate_pairs_build(mentions: DataFrame, max_k: int) -> DataFrame:
 
 
 def candidate_pairs_fast(mentions: DataFrame, max_k: int = MAX_K) -> DataFrame:
-    """Hot-path variant of :func:`candidate_pairs`: identical rows
-    (modulo ``cand_seq``), cheaper physical plan.
+    """The pipeline's candidate stage (fast and checkpointed runs):
+    the rows of :func:`candidate_pairs` without ``cand_seq``, on a
+    cheaper physical plan.
 
     - W5 nearest-pair selection runs as ``min_by`` aggregation (one
       shuffle with map-side partial aggregation) instead of a
       ``row_number`` window (exchange + full sort).
     - ``cand_id`` is derived from the group key (``conv#e1#e2`` —
-      unique after nearest-pair selection), dropping the second
+      unique after nearest-pair selection, and the key
+      ``graph.duck_triples`` pins), dropping the second
       per-conversation numbering exchange entirely.
 
     ``candidate_pairs`` stays as the oracle-parity operator (the

@@ -140,8 +140,8 @@ def shift_positions(featurized: DataFrame) -> DataFrame:
 def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
     """candidate windows → feature arrays (+ ``ok`` quarantine flag).
     ``tokenizer`` mirrors the fused kernel's T2 gate (``'split'`` |
-    ``'treebank'``) so the staged/checkpointed path stays coordinate-
-    compatible with treebank-mode mention detection."""
+    ``'treebank'``) so the staged features stay coordinate-compatible
+    with treebank-mode mention detection."""
     out_schema = (
         ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in windows.schema.fields

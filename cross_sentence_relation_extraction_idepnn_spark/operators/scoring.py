@@ -129,11 +129,14 @@ def featurize_and_score(
     """Fused featurize+score kernel: candidate windows → (keep_cols…,
     ok boolean, y_pred int, p_rel double) in ONE ``mapInPandas`` pass.
 
-    The staged operators (``featurize_pair`` → ``score_pairs``) exist
-    for the resumable checkpointed pipeline; this fusion is the fast
-    path — the fat feature arrays never cross the JVM↔Python boundary
-    at all (built and consumed inside the same Arrow batch), removing
-    one full serialization round-trip and one stage.
+    This is the pipeline's one scoring stage, fast and checkpointed
+    runs alike: the fat feature arrays never cross the JVM↔Python
+    boundary at all (built and consumed inside the same Arrow batch).
+    Every window yields one row; a window that does not featurize
+    gets ``ok = false``, ``y_pred = 0`` and NULL ``p_rel``, so it
+    never passes a threshold and stays visible as quarantine. The
+    staged operators (``featurize_pair`` → ``score_pairs``) serve the
+    feature-output queries, training and the per-layer benchmark.
     """
     if weights is None:
         weights = kernels.init_weights()

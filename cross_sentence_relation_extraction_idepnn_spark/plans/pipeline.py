@@ -1,12 +1,21 @@
 """End-to-end KG-construction pipeline (SURVEY.md §3 Spark lifecycle).
 
-``extract_triples`` chains the full dataflow::
+Every entry point runs ONE stage chain::
 
-    transcripts → segment (W1/T1) → mentions (J7/J2)
-      → candidate pairs (J3/F2/W4/W5, optionally salted)
-      → windows → featurize (G1–G5, Arrow kernel)
-      → score (M1–M7, broadcast frozen weights) → threshold
-      → triples → canonicalize (G6) → dedup (A10)
+    transcripts → sentences (W1/T1) → mentions (J7/J2)
+      → candidates (J3/F2/W4/W5, optionally salted)
+      → scored: windows → featurize (G1–G5) + score (M1–M7) in one
+        fused Arrow kernel; quarantine = the rows with ``ok = false``
+      → triples (threshold) → canonicalize (G6) → kg (dedup A10)
+
+A stage hook decides what happens at each stage boundary. The fast
+hook persists sentences and mentions in memory and leaves every other
+stage lazy; the checkpointed hook (``warehouse=...``) writes every
+stage as a resumable parquet checkpoint with lineage counters (see
+checkpoint.py), so a killed job re-run reuses completed stages and
+produces the identical triple table. Both modes build the same plans:
+their outputs agree on every column, ``cand_id`` (``conv#e1#e2``)
+included.
 
 Shuffle topology: segmentation's sent_idx window and the candidate
 self-join both key on ``conv_id`` — one logical exchange; the dedup
@@ -17,35 +26,32 @@ Skew: a single multi-million-turn conversation would hot-spot the
 conversation into overlapping sentence blocks (overlap = MAX_K, so no
 cross-pair is lost — SURVEY.md §7.3.4) and dedupes pairs that fall in
 two blocks; AQE skew-join splitting covers residual imbalance.
-
-Checkpoint/resume: pass a warehouse path and every stage becomes a
-resumable parquet checkpoint with lineage counters (see checkpoint.py);
-kill the job at any point and a re-run reuses completed stages,
-producing the identical triple table.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..config import MAX_K, SCORE_THRESHOLD
-from ..session import track_cache
-from ..operators.candidates import (
-    CAND_ORDER,
-    candidate_pairs,
-    candidate_pairs_fast,
-)
-from ..operators.graph import candidate_windows, featurize_pair
+from ..session import input_plan_memo, persisted_memo, track_cache
+from ..operators.candidates import CAND_ORDER, candidate_pairs_fast
+from ..operators.graph import candidate_windows
 from ..operators.linking import canonicalize, dedup_triples, rekey_canonical
 from ..operators.mentions import detect_mentions
-from ..operators.scoring import emit_triples, featurize_and_score, score_pairs
+from ..operators.scoring import emit_triples, featurize_and_score
 from ..operators.segmentation import segment
 from ..sources.transcripts import transcripts
 from ..training import load_weights
 from .checkpoint import Checkpointer
 
 SALT_BLOCK = 64  # sentences per salt block (>> MAX_K)
+
+# (stage name, build, upstream stage names) → the stage's DataFrame
+StageHook = Callable[[str, Callable[[], DataFrame], list[str]], DataFrame]
 
 
 def salted_candidate_pairs(
@@ -102,6 +108,104 @@ def salted_candidate_pairs(
     ).withColumn("cand_id", F.concat_ws("#", "conv_id", "cand_seq"))
 
 
+def _fast(name: str, build: Callable[[], DataFrame], upstream: list[str]) -> DataFrame:
+    """Fast-mode stage hook. The sentence table feeds both sides of the
+    candidate self-join and the window fold; the mention table feeds
+    both sides of the self-join and the canonicalization edge build.
+    Both are persisted once instead of re-derived per consumer
+    (VERDICT r3 #3: the duplicated mention pass was the kg_materialize
+    growth, 7.6 → 12.7 → 17.9 s across rounds). Every other stage
+    stays lazy."""
+    df = build()
+    if name in ("sentences", "mentions"):
+        df = track_cache(df.persist(StorageLevel.MEMORY_ONLY))
+    return df
+
+
+def _checkpointed(spark: SparkSession, warehouse: str, resume: bool) -> StageHook:
+    """Checkpointed-mode stage hook: ``Checkpointer.stage`` per stage."""
+    cp = Checkpointer(spark, warehouse)
+    return lambda name, build, upstream: cp.stage(
+        name, build, upstream=upstream, resume=resume
+    )
+
+
+def _candidates(mens: DataFrame, max_k: int, salted: bool) -> DataFrame:
+    pairs = salted_candidate_pairs if salted else candidate_pairs_fast
+    return input_plan_memo(
+        ("candidates", max_k, salted), (mens,), lambda: pairs(mens, max_k=max_k)
+    )
+
+
+def _scored(cands: DataFrame, sents: DataFrame, weights, tokenizer: str) -> DataFrame:
+    # the entry holds the weights object, so its id stays unique
+    return input_plan_memo(
+        ("scored", tokenizer),
+        (cands, sents, weights),
+        lambda: featurize_and_score(
+            candidate_windows(cands, sents), weights=weights, tokenizer=tokenizer
+        ),
+    )
+
+
+def _chain(
+    spark: SparkSession,
+    tdf: DataFrame,
+    stage: StageHook,
+    threshold: float = SCORE_THRESHOLD,
+    max_k: int = MAX_K,
+    salted: bool = False,
+    weights=None,
+    segmenter=None,
+    tokenizer: str = "split",
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The stage chain from transcripts to triples, every boundary
+    handed to ``stage``; returns (mentions, scored, triples).
+
+    ``scored`` keeps one row per candidate: featurize + score run as
+    ONE fused Arrow kernel, so the feature arrays never cross the
+    JVM↔Python boundary, and a row whose window does not featurize
+    comes out with ``ok = false`` and NULL ``p_rel`` — it lands in
+    ``quarantine`` and never passes the threshold. Candidate and
+    scoring plans are memoized on their inputs' identities (r6): on
+    the fast path ``segment``/``detect_mentions``/``load_weights`` hand
+    back stable objects, so the most expensive py4j tree in the engine
+    builds once per session; the memo holds LAZY plans — every action
+    still recomputes from parquet."""
+    weights = weights if weights is not None else load_weights()
+    seg = segmenter if segmenter is not None else segment
+    sents = stage("sentences", lambda: seg(tdf), ["transcripts"])
+    mens = stage(
+        "mentions",
+        lambda: detect_mentions(spark, sents, tokenizer=tokenizer),
+        ["sentences"],
+    )
+    cands = stage(
+        "candidates", lambda: _candidates(mens, max_k, salted), ["mentions"]
+    )
+    scored = stage(
+        "scored",
+        lambda: _scored(cands, sents, weights, tokenizer),
+        ["candidates", "sentences"],
+    )
+    stage("quarantine", lambda: scored.filter(~F.col("ok")), ["scored"])
+    triples = stage(
+        "triples", lambda: emit_triples(scored, threshold=threshold), ["scored"]
+    )
+    return mens, scored, triples
+
+
+def _kg(spark: SparkSession, sf_dir: str, stage: StageHook, **kwargs) -> DataFrame:
+    """The full chain: triples re-keyed by the canonical entity map of
+    the chain's own mention table (G6), then deduped (A10)."""
+    mens, _, triples = _chain(spark, transcripts(spark, sf_dir), stage, **kwargs)
+    return stage(
+        "kg",
+        lambda: dedup_triples(rekey_canonical(triples, canonicalize(mens))),
+        ["triples"],
+    )
+
+
 def scored_from_transcripts(
     spark: SparkSession,
     tdf: DataFrame,
@@ -113,26 +217,11 @@ def scored_from_transcripts(
 ) -> DataFrame:
     """Scored candidate pairs, pre-threshold — feeds both
     ``emit_triples`` and the official-eval ``.a2`` assembly
-    (``a2_annotation_lines``).
-
-    Physical-plan choices (see BASELINE.md for measurements):
-
-    - the sentence table is persisted — it feeds BOTH sides of the
-      candidate self-join and the window join, and would otherwise be
-      recomputed 3×;
-    - candidate generation uses the ``min_by`` aggregation variant
-      (one exchange instead of two window exchanges);
-    - featurize+score run as ONE fused Arrow kernel — feature arrays
-      never cross the JVM↔Python boundary.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    seg = segmenter if segmenter is not None else segment
-    sents = track_cache(seg(tdf).persist(StorageLevel.MEMORY_ONLY))
-    mens = detect_mentions(spark, sents, tokenizer=tokenizer)
-    return scored_from_shared(
-        sents, mens, max_k=max_k, salted=salted, weights=weights, tokenizer=tokenizer
-    )
+    (``a2_annotation_lines``)."""
+    return _chain(
+        spark, tdf, _fast, max_k=max_k, salted=salted, weights=weights,
+        segmenter=segmenter, tokenizer=tokenizer,
+    )[1]
 
 
 def scored_from_shared(
@@ -143,38 +232,11 @@ def scored_from_shared(
     weights=None,
     tokenizer: str = "split",
 ) -> DataFrame:
-    """Scoring subplan over ALREADY-BUILT (ideally persisted) sentence
-    and mention tables. ``materialize_kg`` uses this to share ONE
-    mention subtree between candidate generation and canonicalization
-    instead of re-deriving mentions per consumer (VERDICT r3 #3: the
-    duplicated mention pass was the kg_materialize growth).
-
-    Construction is memoized on (sents, mens, weights) identity (r6):
-    ``segment``/``detect_mentions``/``load_weights`` all hand back
-    stable objects on the default path, so the candidate + fused-
-    kernel plan (the most expensive py4j tree in the engine) builds
-    once per session. The memo holds a LAZY plan — every action still
-    recomputes from parquet."""
-    from ..session import input_plan_memo
-
+    """The chain's candidates → scored stages over ALREADY-BUILT
+    (ideally persisted) sentence and mention tables, memoized on
+    (sents, mens, weights) identity like the chain itself."""
     weights = weights if weights is not None else load_weights()
-
-    def build() -> DataFrame:
-        cands = (
-            salted_candidate_pairs(mens, max_k=max_k)
-            if salted
-            else candidate_pairs_fast(mens, max_k=max_k)
-        )
-        return featurize_and_score(
-            candidate_windows(cands, sents), weights=weights, tokenizer=tokenizer
-        )
-
-    # the entry holds the weights object, so its id stays unique
-    return input_plan_memo(
-        ("scored_from_shared", max_k, salted, tokenizer),
-        (sents, mens, weights),
-        build,
-    )
+    return _scored(_candidates(mens, max_k, salted), sents, weights, tokenizer)
 
 
 def triples_from_transcripts(
@@ -196,11 +258,10 @@ def triples_from_transcripts(
     featurization — shares the same token coordinate system
     (parity-checked against a single-node numpy pipeline in
     ``tests/test_parity.py``)."""
-    scored = scored_from_transcripts(
-        spark, tdf, max_k=max_k, salted=salted, weights=weights,
-        segmenter=segmenter, tokenizer=tokenizer,
-    )
-    return emit_triples(scored, threshold=threshold)
+    return _chain(
+        spark, tdf, _fast, threshold=threshold, max_k=max_k, salted=salted,
+        weights=weights, segmenter=segmenter, tokenizer=tokenizer,
+    )[2]
 
 
 def extract_triples(
@@ -218,73 +279,16 @@ def extract_triples(
     """Full pipeline → per-candidate triples (pre-dedup).
 
     With ``warehouse`` set, every stage checkpoints (resumable);
-    without, the whole chain runs as one lazy plan. The
-    ``segmenter``/``tokenizer`` gates (punkt/treebank mode) apply to
-    BOTH paths, so a checkpointed punctuated-corpus run stays
-    coordinate-consistent across every stage.
+    without, the whole chain runs as one lazy plan over persisted
+    sentences and mentions. The ``segmenter``/``tokenizer`` gates
+    (punkt/treebank mode) apply to BOTH modes.
     """
-    weights = weights if weights is not None else load_weights()
-    pair_fn = salted_candidate_pairs if salted else candidate_pairs
-    seg = segmenter if segmenter is not None else segment
-
-    if warehouse is None:
-        return triples_from_transcripts(
-            spark,
-            transcripts(spark, sf_dir),
-            threshold=threshold,
-            max_k=max_k,
-            salted=salted,
-            weights=weights,
-            segmenter=segmenter,
-            tokenizer=tokenizer,
-        )
-
-    cp = Checkpointer(spark, warehouse)
-    sents = cp.stage(
-        "sentences",
-        lambda: seg(transcripts(spark, sf_dir)),
-        upstream=["transcripts"],
-        resume=resume,
-    )
-    mens = cp.stage(
-        "mentions",
-        lambda: detect_mentions(spark, sents, tokenizer=tokenizer),
-        upstream=["sentences"],
-        resume=resume,
-    )
-    cands = cp.stage(
-        "candidates",
-        lambda: pair_fn(mens, max_k=max_k),
-        upstream=["mentions"],
-        resume=resume,
-    )
-    feats = cp.stage(
-        "featurized",
-        lambda: featurize_pair(candidate_windows(cands, sents), tokenizer=tokenizer),
-        upstream=["candidates", "sentences"],
-        resume=resume,
-    )
-    cp.stage(
-        "quarantine",
-        lambda: feats.filter(~F.col("ok")),
-        upstream=["featurized"],
-        resume=resume,
-    )
-    scored = cp.stage(
-        "scored",
-        lambda: score_pairs(feats.filter("ok"), weights=weights),
-        upstream=["featurized"],
-        resume=resume,
-    )
-    return cp.stage(
-        "triples",
-        lambda: emit_triples(scored, threshold=threshold),
-        upstream=["scored"],
-        resume=resume,
-    )
-
-
-_KG_MEMO: dict[tuple[str, str], DataFrame] = {}
+    stage = _fast if warehouse is None else _checkpointed(spark, warehouse, resume)
+    return _chain(
+        spark, transcripts(spark, sf_dir), stage, threshold=threshold,
+        max_k=max_k, salted=salted, weights=weights, segmenter=segmenter,
+        tokenizer=tokenizer,
+    )[2]
 
 
 def materialize_kg(
@@ -295,6 +299,13 @@ def materialize_kg(
 ) -> DataFrame:
     """Triples → canonical entity map → deduped KG table.
 
+    Canonical components re-key subj/obj (G6) before the A10 dedup
+    shuffle; the component map is tiny → broadcast join. The mention
+    table feeds both the candidate self-join and the canonicalization
+    edge build: the fast path hands both the one persisted mention
+    table, the checkpointed path (``warehouse``; ``resume`` as in
+    ``extract_triples``) the written ``mentions`` stage.
+
     Session-level memo (default-argument path only): ~15 analytics
     queries take the materialized KG as input; in one session (the
     driver correctness harness runs them back-to-back) each would
@@ -303,77 +314,21 @@ def materialize_kg(
     supposed to prevent. The memoized KG is persisted with lineage
     intact and registered with ``track_cache``; after a
     ``release_caches()`` (bench does this per query so its timings
-    keep including the honest rebuild) the entry is discarded and the
-    next call rebuilds fresh, so the shared-subtree persists inside
-    the rebuild stay effective.
-
-    Canonical components re-key subj/obj (G6) before the A10 dedup
-    shuffle; the component map is tiny → broadcast join.
-
-    Plan sharing (VERDICT r3 #3): the mention table feeds THREE
-    consumers — both sides of the candidate self-join and the
-    canonicalization edge build. The fast path persists it once and
-    hands the same DataFrame to ``scored_from_shared`` and
-    ``canonicalize``; the checkpointed path reads the already-written
-    ``mentions`` stage instead of re-running detection. Without this,
-    the J7+J2 mention subtree executed ~3× per materialization
-    (measured: kg_materialize grew 7.6→12.7→17.9 s across rounds as
-    the KG stage widened around the duplicated subtree).
+    keep including the honest rebuild) the next call rebuilds fresh,
+    so the shared-subtree persists inside the rebuild stay effective.
+    ``invalidate_parquet_cache(path)`` drops the KG built on ``path``.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if warehouse is None and not kwargs:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        memo = _KG_MEMO.get(key)
-        if memo is not None and (
-            memo.storageLevel.useMemory or memo.storageLevel.useDisk
-        ):
-            return memo
-        _KG_MEMO.pop(key, None)
-        if len(_KG_MEMO) > 64:
-            _KG_MEMO.clear()
-        kg = track_cache(
-            _materialize_kg_fresh(spark, sf_dir).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+        return persisted_memo(
+            spark,
+            ("materialize_kg", sf_dir),
+            lambda: track_cache(
+                _kg(spark, sf_dir, _fast).persist(StorageLevel.MEMORY_AND_DISK)
+            ),
         )
-        _KG_MEMO[key] = kg
-        return kg
-
-    if warehouse is None:
-        return _materialize_kg_fresh(spark, sf_dir, **kwargs)
-
-    triples = extract_triples(spark, sf_dir, warehouse=warehouse, **kwargs)
-    cp = Checkpointer(spark, warehouse)
-    mens = cp.read("mentions")
-    canon = canonicalize(mens)
-    kg = dedup_triples(rekey_canonical(triples, canon))
-    return cp.stage("kg", lambda: kg, upstream=["triples"], resume=kwargs.get("resume", True))
-
-
-def _materialize_kg_fresh(
-    spark: SparkSession, sf_dir: str, **kwargs
-) -> DataFrame:
-    """The un-memoized default-path build (shared mention subtree)."""
-    from pyspark.storagelevel import StorageLevel
-
-    threshold = kwargs.pop("threshold", SCORE_THRESHOLD)
-    tokenizer = kwargs.pop("tokenizer", "split")
-    segmenter = kwargs.pop("segmenter", None)
-    kwargs.pop("resume", None)
-    seg = segmenter if segmenter is not None else segment
-    sents = track_cache(
-        seg(transcripts(spark, sf_dir)).persist(StorageLevel.MEMORY_ONLY)
-    )
-    mens = track_cache(
-        detect_mentions(spark, sents, tokenizer=tokenizer).persist(
-            StorageLevel.MEMORY_ONLY
-        )
-    )
-    scored = scored_from_shared(sents, mens, tokenizer=tokenizer, **kwargs)
-    triples = emit_triples(scored, threshold=threshold)
-    canon = canonicalize(mens)
-    return dedup_triples(rekey_canonical(triples, canon))
+    resume = kwargs.pop("resume", True)
+    stage = _fast if warehouse is None else _checkpointed(spark, warehouse, resume)
+    return _kg(spark, sf_dir, stage, **kwargs)
 
 
 def temporal_kg(
@@ -387,10 +342,9 @@ def temporal_kg(
     (first/last conversation timestamp) and distinct-conversation
     support — ``(subj, pred, obj, first_seen, last_seen, n_convs)``.
 
-    Shares ONE persisted sentence/mention subtree between the
-    candidate self-join and the canonicalization edge build — the same
-    plan-sharing shape as ``materialize_kg`` (VERDICT r3 #3: without
-    it the J7+J2 mention stage executes ~3× per run). All three
+    Runs the fast stage chain, so the one persisted mention table feeds
+    both the candidate self-join and the canonicalization edge build,
+    as in ``materialize_kg``. All three
     aggregates are decomposable (min / max / count-distinct under
     conv-partitioned deltas), so ``merge_kg_tables``-style incremental
     maintenance extends to the temporal columns: pass per-delta
@@ -400,15 +354,9 @@ def temporal_kg(
     timestamp dimension joins on ``conv_id`` — the key the pipeline
     already shuffles on (conv-grain ≪ corpus; AQE picks broadcast vs
     shuffle by size)."""
-    from pyspark.storagelevel import StorageLevel
-
     if tdf is None:
         tdf = transcripts(spark, sf_dir)
-    sents = track_cache(segment(tdf).persist(StorageLevel.MEMORY_ONLY))
-    mens = track_cache(
-        detect_mentions(spark, sents).persist(StorageLevel.MEMORY_ONLY)
-    )
-    triples = emit_triples(scored_from_shared(sents, mens), threshold=threshold)
+    mens, _, triples = _chain(spark, tdf, _fast, threshold=threshold)
     if canon is None:
         canon = canonicalize(mens)
     conv_ts = tdf.groupBy("conv_id").agg(

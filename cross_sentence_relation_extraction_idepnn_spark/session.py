@@ -134,13 +134,29 @@ def _scans_under(df, root: str) -> bool:
     from urllib.parse import urlparse
 
     try:
-        files = df.inputFiles()
+        files = _input_files(df)
     except Exception:
         return True
     return any(
         p == root or p.startswith(root + "/")
         for p in (urlparse(f).path for f in files)
     )
+
+
+def _input_files(df) -> list[str]:
+    """The files a DataFrame's ANALYZED plan reads. ``inputFiles()``
+    walks the plan after cached data is substituted in, so it sees no
+    file below a persisted subtree (every plan over the persisted
+    sentence table, the persisted KG itself)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: list[str] = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                files.extend(rel.inputFiles())
+    return files
 
 
 # ---------------------------------------------------- lazy plan memo (r6)
@@ -165,12 +181,7 @@ def input_plan_memo(key: tuple, inputs: tuple, build):
     app = inputs[0].sparkSession.sparkContext.applicationId
     k = (app,) + tuple(key) + tuple(id(x) for x in inputs)
     entry = _PLAN_CACHE.get(k)
-    if entry is None:
-        if len(_PLAN_CACHE) > 512:
-            _PLAN_CACHE.clear()
-        entry = (build(), inputs)
-        _PLAN_CACHE[k] = entry
-    return entry[0]
+    return entry[0] if entry is not None else _remember(k, build(), inputs)
 
 
 def plan_memo(spark: SparkSession, key: tuple, build):
@@ -188,12 +199,31 @@ def plan_memo(spark: SparkSession, key: tuple, build):
     non-default parameter in ``key``."""
     k = (spark.sparkContext.applicationId,) + tuple(key)
     entry = _PLAN_CACHE.get(k)
-    if entry is None:
-        if len(_PLAN_CACHE) > 512:
-            _PLAN_CACHE.clear()
-        entry = (build(), ())
-        _PLAN_CACHE[k] = entry
-    return entry[0]
+    return entry[0] if entry is not None else _remember(k, build(), ())
+
+
+def persisted_memo(spark: SparkSession, key: tuple, build):
+    """:func:`plan_memo` for a DataFrame that ``build`` persists (the
+    materialized KG): the entry is handed back while its data stays
+    cached, and rebuilt once the data was released (``release_caches``,
+    ``catalog.clearCache``), so the next call pays the honest rebuild
+    and re-persists whatever the build shares. It lives with the lazy
+    plans, so ``invalidate_parquet_cache(path)`` drops it when it was
+    built on ``path``."""
+    k = (spark.sparkContext.applicationId,) + tuple(key)
+    entry = _PLAN_CACHE.get(k)
+    if entry is not None:
+        level = entry[0].storageLevel
+        if level.useMemory or level.useDisk:
+            return entry[0]
+    return _remember(k, build(), ())
+
+
+def _remember(k: tuple, df, inputs: tuple):
+    if len(_PLAN_CACHE) > 512:
+        _PLAN_CACHE.clear()
+    _PLAN_CACHE[k] = (df, inputs)
+    return df
 
 
 # ------------------------------------------------- operator cache registry

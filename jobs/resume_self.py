@@ -31,7 +31,7 @@ import time
 SF_DIR = os.environ.get("RESUME_SELF_SF", "/root/testdata/sf0.01")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "RESUME_SELF.json")
 
-KILLED_STAGES = ("featurized", "quarantine", "scored", "triples")
+KILLED_STAGES = ("quarantine", "scored", "triples")
 
 
 def triple_hash(df) -> tuple[int, str]:

@@ -587,3 +587,53 @@ def test_extraction_funnel_matches_stage_operators(spark, sf_dir):
     assert got["6_triples"] == qs["triples"](spark, sf_dir).count()
     assert got["7_kg"] == qs["kg"](spark, sf_dir).count()
     assert got["5_featurized_ok"] >= got["6_triples"] >= got["7_kg"]
+
+
+def test_fused_kernel_quarantines_unfeaturizable_window(spark, sf_dir):
+    """The fused kernel keeps a window it cannot featurize (token 9999)
+    as ``ok = false`` with NULL ``p_rel``: it is neither raised nor
+    dropped, and no threshold — not even 0 — turns it into a triple."""
+    from cross_sentence_relation_extraction_idepnn_spark.operators.candidates import (
+        candidate_pairs_fast,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.operators.scoring import (
+        featurize_and_score,
+    )
+
+    sents = segment(transcripts(spark, sf_dir))
+    windows = candidate_windows(
+        candidate_pairs_fast(detect_mentions(spark, sents)), sents
+    )
+    broken = windows.limit(1).withColumn("tok1", F.lit(9999)).withColumn(
+        "cand_id", F.lit("planted#broken")
+    )
+    scored = featurize_and_score(
+        windows.unionByName(broken), weights=load_weights()
+    )
+
+    row = scored.filter(F.col("cand_id") == "planted#broken").collect()
+    assert len(row) == 1
+    assert row[0].ok is False and row[0].p_rel is None
+    assert scored.count() == windows.count() + 1
+    assert emit_triples(scored).filter(F.col("cand_id") == "planted#broken").count() == 0
+    assert emit_triples(scored.filter(~F.col("ok")), threshold=0.0).count() == 0
+
+
+def test_scores_keep_a_margin_from_the_threshold(spark, sf_dir):
+    """Threshold-margin guard: no scored candidate sits within 1e-6 of
+    ``SCORE_THRESHOLD``, so float drift between engines or kernel
+    revisions cannot flip which triples are emitted."""
+    from cross_sentence_relation_extraction_idepnn_spark.config import (
+        SCORE_THRESHOLD,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
+        scored_from_transcripts,
+    )
+
+    scored = scored_from_transcripts(spark, transcripts(spark, sf_dir))
+    row = scored.filter("ok").agg(
+        F.count("*").alias("n"),
+        F.min(F.abs(F.col("p_rel") - F.lit(SCORE_THRESHOLD))).alias("margin"),
+    ).collect()[0]
+    assert row.n > 0
+    assert row.margin >= 1e-6

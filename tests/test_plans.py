@@ -89,16 +89,19 @@ def test_kg_path_driver_tables_are_local_relations(spark, sf_dir):
     from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
         canonicalize,
     )
+    from cross_sentence_relation_extraction_idepnn_spark.config import SCORE_THRESHOLD
     from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
-        _materialize_kg_fresh,
+        materialize_kg,
     )
 
-    # one at a time: _materialize_kg_fresh persists the memoized
-    # mention table, after which its plan shows only the cache scan
+    # one at a time: the KG build persists the memoized mention table,
+    # after which its plan shows only the cache scan
     mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
     assert "Scan ExistingRDD" not in plan_of(mens)
     assert "Scan ExistingRDD" not in plan_of(canonicalize(mens))
-    assert "Scan ExistingRDD" not in plan_of(_materialize_kg_fresh(spark, sf_dir))
+    # an explicit argument skips the session memo: an un-memoized build
+    kg = materialize_kg(spark, sf_dir, threshold=SCORE_THRESHOLD)
+    assert "Scan ExistingRDD" not in plan_of(kg)
 
 
 def test_create_dataframe_only_inside_local_frame():

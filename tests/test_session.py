@@ -114,3 +114,30 @@ def test_invalidate_parquet_cache_drops_plans_built_on_the_path(
     assert convs() == {f"conv-{i}" for i in ids[3:]}
     # plans over other paths stay memoized
     assert transcripts(spark, sf_dir) is other
+
+
+def test_invalidate_parquet_cache_drops_the_persisted_kg(spark, sf_dir, tmp_path):
+    """The session memo of ``materialize_kg`` is built on its corpus
+    path: after the path is rewritten and invalidated, the memoized KG
+    is the KG of the new rows."""
+    from cross_sentence_relation_extraction_idepnn_spark.config import SCORE_THRESHOLD
+    from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
+        materialize_kg,
+    )
+
+    src = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ids = sorted(r[0] for r in src.select("doc_id").collect())
+    d = str(tmp_path)
+    path = f"{d}/documents.parquet"
+
+    def kg_rows(df) -> list[tuple]:
+        return sorted(tuple(r) for r in df.collect())
+
+    src.filter(F.col("doc_id").isin(ids[:5])).write.parquet(path)
+    old = kg_rows(materialize_kg(spark, d))
+    src.filter(F.col("doc_id").isin(ids[5:50])).write.mode("overwrite").parquet(path)
+    session.invalidate_parquet_cache(path)
+    new = kg_rows(materialize_kg(spark, d))
+    assert new != old
+    # an explicit argument skips the memo: a fresh build on the new rows
+    assert new == kg_rows(materialize_kg(spark, d, threshold=SCORE_THRESHOLD))
