@@ -25,8 +25,13 @@ Reference semantics re-expressed:
   heuristics; our candidates carry exact (sent_idx, tok_idx)
   coordinates, so resolution is exact positional arithmetic — same
   observable result on clean input, minus the string-ambiguity quirks.
-- G4 iSDP (``generate_sdp.py:111-114``): unweighted BFS shortest path
-  (networkx ``shortest_path`` equivalent); unreachable → quarantine.
+- G4 iSDP (``generate_sdp.py:111-114``): the reference takes the
+  unweighted shortest path (networkx ``shortest_path``). Heads point
+  left and sentence roots chain to the previous root, so the window
+  graph is a tree whose every parent has a smaller index than its
+  child: the path is found by climbing from the larger of the two
+  indices until the ends meet (``bfs_path`` stays as the test
+  reference).
 - G5 ADP (``recursive_net_utils/data_utils.py:13-149``): a dummy root
   joins sentence roots (``combine_parents_list``); the TreeRNN consumes
   a topologically-ordered flattened (x, tree, out_idx) schedule
@@ -39,11 +44,16 @@ Reference semantics re-expressed:
 
 Everything is float64 end-to-end (the reference mixes float64/float32 —
 ``tree_rnn.py:7`` — a latent inconsistency we do not copy).
+
+Executor-local memos are ``functools.lru_cache`` on pure functions, each
+with a finite bound, so a long-lived Python worker keeps its memory
+bounded and evicts least-recently-used entries first.
 """
 
 from __future__ import annotations
 
 import hashlib
+from functools import lru_cache
 
 import numpy as np
 
@@ -57,18 +67,18 @@ def h15(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-_h15w_cache: dict[str, int] = {}
+# memo bounds, in entries per worker process
+_WORD_MEMO = 1 << 15  # distinct words
+_SENT_MEMO = 1 << 16  # distinct sentences
+_WINDOW_MEMO = 1 << 15  # distinct candidate windows
 
 
+@lru_cache(maxsize=_WORD_MEMO)
 def _h15w(w: str) -> int:
     """Cached h15 over word tokens — the featurizer calls this O(n²)
     per sentence (head attachment scans) over a small vocabulary, so
     memoization removes ~all md5 cost from the hot kernel."""
-    v = _h15w_cache.get(w)
-    if v is None:
-        v = h15(w)
-        _h15w_cache[w] = v
-    return v
+    return h15(w)
 
 
 # ---------------------------------------------------------------- G1: parser
@@ -80,28 +90,17 @@ REL_LIST = ["root", "det", "dep", "mod", "link"]
 IOB_LIST = ["O", "E1", "E2"]
 
 
-_pos_cache: dict[str, str] = {}
-_POS_CACHE_MAX = 200_000
-
-
+@lru_cache(maxsize=_WORD_MEMO)
 def pos_tag(word: str) -> str:
     # word-level memo (r6): the SDP extraction tags ~4 words per
     # candidate over a small vocabulary — measured 1.2M calls for a
     # few thousand distinct words at sf0.1
-    t = _pos_cache.get(word)
-    if t is not None:
-        return t
     w = word.lower()
     if w in FUNCTION_WORDS:
-        t = FUNCTION_WORDS[w]
-    elif w in ENTITY_ALIASES:
-        t = "OP" if ENTITY_ALIASES[w][1] == "OP" else "NN"
-    else:
-        t = "JJ" if _h15w(w) % 2 == 0 else "VB"
-    if len(_pos_cache) >= _POS_CACHE_MAX:
-        _pos_cache.clear()
-    _pos_cache[word] = t
-    return t
+        return FUNCTION_WORDS[w]
+    if w in ENTITY_ALIASES:
+        return "OP" if ENTITY_ALIASES[w][1] == "OP" else "NN"
+    return "JJ" if _h15w(w) % 2 == 0 else "VB"
 
 
 def head_of(words: list[str], i: int) -> int:
@@ -114,23 +113,14 @@ def head_of(words: list[str], i: int) -> int:
     return i - 1
 
 
-_head_cache: dict[str, list[int]] = {}
-_HEAD_CACHE_MAX = 50_000  # bound executor-resident memory (32 workers share RAM)
-
-
-def heads_of(words: list[str]) -> list[int]:
-    """Per-sentence head array, memoized — every candidate window
-    re-parses its sentences (build_edges + combined_parents), and the
-    same sentence appears in many windows; this makes parsing
-    O(distinct sentences) per executor instead of O(windows)."""
-    key = "\x00".join(words)
-    v = _head_cache.get(key)
-    if v is None:
-        if len(_head_cache) >= _HEAD_CACHE_MAX:
-            _head_cache.clear()
-        v = [head_of(words, i) for i in range(len(words))]
-        _head_cache[key] = v
-    return v
+@lru_cache(maxsize=_SENT_MEMO)
+def heads_of(words: tuple[str, ...]) -> tuple[int, ...]:
+    """Per-sentence head array, memoized on the sentence tuple — every
+    candidate window re-parses its sentences (build_edges +
+    combined_parents), and the same sentence appears in many windows;
+    this makes parsing O(distinct sentences) per executor instead of
+    O(windows)."""
+    return tuple(head_of(words, i) for i in range(len(words)))
 
 
 def dep_rel(words: list[str], i: int) -> str:
@@ -224,7 +214,7 @@ def entity_token_index(
     return idx
 
 
-# ------------------------------------------------- G2/G4: graph + BFS SDP
+# ------------------------------------- G2/G4: graph + BFS (test reference)
 
 def build_edges(sent_words: list[list[str]]) -> tuple[list[tuple[int, int]], list[int]]:
     """Undirected edge list over global token indices + per-sentence root
@@ -234,7 +224,7 @@ def build_edges(sent_words: list[list[str]]) -> tuple[list[tuple[int, int]], lis
     offset = 0
     for words in sent_words:
         roots.append(offset)  # token 0 is the root of each sentence
-        for i, h in enumerate(heads_of(words)):
+        for i, h in enumerate(heads_of(tuple(words))):
             if h >= 0:
                 edges.append((offset + i, offset + h))
         offset += len(words)
@@ -281,7 +271,7 @@ def combined_parents(sent_words: list[list[str]]) -> list[int]:
     offset = 0
     total = sum(len(w) for w in sent_words)
     for words in sent_words:
-        for h in heads_of(words):
+        for h in heads_of(tuple(words)):
             parents.append(total if h < 0 else offset + h)
         offset += len(words)
     return parents  # dummy root = index `total` (implicit, no row)
@@ -312,10 +302,8 @@ def tree_schedule(parents: list[int]) -> list[int]:
     return order  # post-order: children before parents, dummy root last
 
 
-_post_cache: dict[str, list[int]] = {}
-
-
-def _sentence_postorder(words: list[str]) -> list[int]:
+@lru_cache(maxsize=_SENT_MEMO)
+def _sentence_postorder(words: tuple[str, ...]) -> tuple[int, ...]:
     """Per-sentence DFS post-order (local indices), memoized like
     ``heads_of``. Node-for-node identical to the order
     :func:`tree_schedule` emits for that sentence's subtree: the
@@ -323,30 +311,21 @@ def _sentence_postorder(words: list[str]) -> list[int]:
     independently (roots are the dummy root's children), pushing
     children onto the stack in ascending order — which is exactly
     what this per-sentence visit does."""
-    key = "\x00".join(words)
-    v = _post_cache.get(key)
-    if v is None:
-        if len(_post_cache) >= _HEAD_CACHE_MAX:
-            _post_cache.clear()
-        n = len(words)
-        heads = heads_of(words)
-        children: list[list[int]] = [[] for _ in range(n)]
-        for i, h in enumerate(heads):
-            if h >= 0:
-                children[h].append(i)
-        order: list[int] = []
-        stack = [(0, False)]  # token 0 is the sentence root
-        while stack:
-            node, done = stack.pop()
-            if done:
-                order.append(node)
-                continue
-            stack.append((node, True))
-            for c in children[node]:
-                stack.append((c, False))
-        v = order
-        _post_cache[key] = v
-    return v
+    children: list[list[int]] = [[] for _ in words]
+    for i, h in enumerate(heads_of(words)):
+        if h >= 0:
+            children[h].append(i)
+    order: list[int] = []
+    stack = [(0, False)]  # token 0 is the sentence root
+    while stack:
+        node, done = stack.pop()
+        if done:
+            order.append(node)
+            continue
+        stack.append((node, True))
+        for c in children[node]:
+            stack.append((c, False))
+    return tuple(order)
 
 
 def window_schedule(sent_words: list[list[str]]) -> list[int]:
@@ -367,7 +346,7 @@ def window_schedule(sent_words: list[list[str]]) -> list[int]:
         o += len(words)
     order: list[int] = []
     for words, off in zip(reversed(sent_words), reversed(offsets)):
-        order.extend(off + u for u in _sentence_postorder(words))
+        order.extend(off + u for u in _sentence_postorder(tuple(words)))
     order.append(total)  # dummy root last
     return order
 
@@ -399,20 +378,13 @@ def _unit_vec(key: str, dim: int) -> np.ndarray:
     return rs.uniform(-0.5, 0.5, dim)
 
 
-_word_cache: dict[str, np.ndarray] = {}
-
-
+@lru_cache(maxsize=_WORD_MEMO)
 def word_vec(word: str) -> np.ndarray:
     """Deterministic per-word embedding (the reference loads word2vec
     text files, features_bb2016.py:2420-2439; in-sandbox the table is a
     hash-seeded deterministic analogue — same lookup semantics, `<unk>`
     impossible by construction)."""
-    w = word.lower()
-    v = _word_cache.get(w)
-    if v is None:
-        v = _unit_vec("word:" + w, EMB_DIM)
-        _word_cache[w] = v
-    return v
+    return _unit_vec("word:" + word.lower(), EMB_DIM)
 
 
 def pos_vec_table() -> np.ndarray:
@@ -567,49 +539,10 @@ def weights_from_lists(d: dict[str, list]) -> dict[str, np.ndarray]:
 
 # ------------------------------------------------------- featurize (per row)
 
-_win_cache: dict = {}
-_WIN_CACHE_MAX = 20_000  # bound executor-resident memory
-# id(parents) → (parents ref, parents as int64 array, per-node levels);
-# filled by _window_structures, consumed by tree_mean_states
-_tree_arrays: dict[int, tuple] = {}
-
-
-def _window_structures(key: tuple, tokenize):
-    """Window-level memo: many candidates share the same sentence
-    window (every pair inside a conversation span), so everything that
-    depends only on the window — tokenization, offsets, the dependency
-    adjacency (G1/G2), the ADP parent array and its topological
-    schedule (G5) — computes once per DISTINCT window per executor.
-    Only the per-candidate BFS and index arrays remain in the row
-    loop. Returns (offsets, all_words, adj, parents, order) or None
-    for an empty-tokenizing window (F5)."""
-    ckey = (key, getattr(tokenize, "__name__", None))
-    hit = _win_cache.get(ckey)
-    if hit is not None:
-        return hit if hit != () else None
-    if len(_win_cache) >= _WIN_CACHE_MAX:
-        _win_cache.clear()
-    if tokenize is None:
-        sent_words = [s.split(" ") if s and s.strip() else [] for s in key]
-    else:
-        sent_words = [tokenize(s) if s and s.strip() else [] for s in key]
-    if any(len(w) == 0 for w in sent_words):
-        _win_cache[ckey] = ()
-        return None
-    offsets = np.cumsum([0] + [len(w) for w in sent_words])
-    all_words = [w for ws in sent_words for w in ws]
-    edges, _roots = build_edges(sent_words)
-    adj: list[list[int]] = [[] for _ in range(len(all_words))]
-    for a, b in edges:
-        adj[a].append(b)
-        adj[b].append(a)
-    parents = combined_parents(sent_words)
-    order = window_schedule(sent_words)  # == tree_schedule(parents), memoized
-    # Per-window TreeRNN arrays, computed once per DISTINCT window per
-    # executor (r6): tree_mean_states previously re-derived the level
-    # array and the numpy parent array for every (window, batch) pair.
-    # Keyed on the parents list's identity; the entry holds the list so
-    # the id stays valid for the entry's lifetime.
+def _tree_levels(parents, order) -> list[int]:
+    """Per-node height above the leaves (the TreeRNN wave index),
+    derived along a leaves-first ``order``; the dummy root is left
+    out."""
     n = len(parents)
     l = [0] * (n + 1)
     for u in order:
@@ -617,38 +550,43 @@ def _window_structures(key: tuple, tokenize):
             pu = parents[u]
             if pu < n and l[u] + 1 > l[pu]:
                 l[pu] = l[u] + 1
-    if len(_tree_arrays) >= _WIN_CACHE_MAX:
-        _tree_arrays.clear()
-    _tree_arrays[id(parents)] = (
-        parents,
+    return l[:n]
+
+
+@lru_cache(maxsize=_WINDOW_MEMO)
+def _window_structures(key: tuple[str, ...], tokenize):
+    """Window-level memo: many candidates share the same sentence
+    window (every pair inside a conversation span), so everything that
+    depends only on the window — tokenization, offsets, the SDP tree
+    (G1/G2), the ADP parent array, its topological schedule and the
+    TreeRNN arrays (G5) — computes once per DISTINCT window per
+    executor. Only the per-candidate tree walk and index arrays remain
+    in the row loop.
+
+    Returns (offsets, all_words, up, parents, order, tree_arrays), or
+    None for an empty-tokenizing window (F5). ``up`` is the SDP tree's
+    parent: the in-sentence head, or the previous sentence's root for a
+    sentence root (-1 for the first). ``tree_arrays`` is (parents as
+    int64, per-node levels)."""
+    split = tokenize or (lambda s: s.split(" "))
+    sent_words = [tuple(split(s)) if s and s.strip() else () for s in key]
+    if not all(sent_words):
+        return None
+    offsets = [0]
+    up: list[int] = []
+    for words in sent_words:
+        off = offsets[-1]
+        up.append(offsets[-2] if len(offsets) > 1 else -1)
+        up.extend(off + h for h in heads_of(words)[1:])
+        offsets.append(off + len(words))
+    all_words = [w for ws in sent_words for w in ws]
+    parents = combined_parents(sent_words)
+    order = window_schedule(sent_words)  # == tree_schedule(parents), memoized
+    tree_arrays = (
         np.asarray(parents, dtype=np.int64),
-        np.asarray(l[:n], dtype=np.int64),
+        np.asarray(_tree_levels(parents, order), dtype=np.int64),
     )
-    out = (offsets, all_words, adj, parents, order)
-    _win_cache[ckey] = out
-    return out
-
-
-def bfs_path_adj(adj: list[list[int]], src: int, dst: int) -> list[int] | None:
-    """``bfs_path`` over a prebuilt adjacency (the per-window memo)."""
-    prev = [-2] * len(adj)
-    prev[src] = -1
-    queue = [src]
-    while queue:
-        nxt: list[int] = []
-        for u in queue:
-            if u == dst:
-                path = []
-                while u != -1:
-                    path.append(u)
-                    u = prev[u]
-                return path[::-1]
-            for v in adj[u]:
-                if prev[v] == -2:
-                    prev[v] = u
-                    nxt.append(v)
-        queue = nxt
-    return None
+    return offsets, all_words, up, parents, order, tree_arrays
 
 
 def featurize_window(
@@ -668,21 +606,32 @@ def featurize_window(
     (sent_idx, tok_idx) coordinates from treebank-mode mention
     detection index the same token lists here.
 
-    Returns None when the SDP is unreachable (quarantine route, F3) or
-    the window tokenizes empty (F5).
+    Returns None when an entity index lies outside the window
+    (quarantine route, F3) or the window tokenizes empty (F5). Every
+    window graph is connected, so an SDP always exists. The row also
+    carries the window's ``tree_arrays`` for :func:`tree_mean_states`.
     """
     win = _window_structures(tuple(sent_texts), tokenize)
     if win is None:
         return None
-    offsets, all_words, adj, parents, order = win
+    offsets, all_words, up, parents, order, tree_arrays = win
     g1 = int(offsets[sent1 - smin] + tok1)
     g2 = int(offsets[sent2 - smin] + tok2)
     n = len(all_words)
-    if g1 >= n or g2 >= n:
+    if not (0 <= g1 < n and 0 <= g2 < n):
         return None
-    path = bfs_path_adj(adj, g1, g2)
-    if path is None:
-        return None
+    # every parent's index is below its child's, so the larger end is
+    # never an ancestor of the other: climb it until the ends meet
+    a, b = g1, g2
+    left, right = [a], [b]
+    while a != b:
+        if a > b:
+            a = up[a]
+            left.append(a)
+        else:
+            b = up[b]
+            right.append(b)
+    path = left + right[-2::-1]
     sdp_words = [all_words[i] for i in path]
     sdp_pos = [POS_LIST.index(pos_tag(w)) for w in sdp_words]
     sdp_iob = [
@@ -702,6 +651,7 @@ def featurize_window(
         "win_words": all_words,
         "parents": parents,
         "tree_order": order,
+        "tree_arrays": tree_arrays,
     }
 
 
@@ -894,26 +844,15 @@ def tree_mean_states(rows: list[dict], W: dict[str, np.ndarray]) -> np.ndarray:
         o = int(offs[b])
         n = int(offs[b + 1]) - o
         wid[o : o + n] = [setdefault(w.lower(), len(vocab)) for w in r["win_words"]]
-        p = r["parents"]
-        ent = _tree_arrays.get(id(p))
-        if ent is not None and ent[0] is p:
-            # fused path: the same memoized parents object —
-            # per-window arrays were computed once in
-            # _window_structures (r6)
-            parr, larr = ent[1], ent[2]
-            par[o : o + n] = np.where(parr >= n, N, o + parr)
-            lvl[o : o + n] = larr
-            continue
-        l = [0] * (n + 1)
-        for u in r["tree_order"]:
-            if u < n:
-                pu = p[u]
-                if pu < n and l[u] + 1 > l[pu]:
-                    l[pu] = l[u] + 1
-        for i in range(n):
-            pi = p[i]
-            par[o + i] = N if pi >= n else o + pi
-            lvl[o + i] = l[i]
+        # featurize_window rows carry the window's memoized arrays;
+        # staged rows arrive from Arrow without them
+        arrays = r.get("tree_arrays")
+        if arrays is None:
+            p = r["parents"]
+            arrays = (np.asarray(p, dtype=np.int64), _tree_levels(p, r["tree_order"]))
+        parr, larr = arrays
+        par[o : o + n] = np.where(parr >= n, N, o + parr)
+        lvl[o : o + n] = larr
     emb = np.empty((len(vocab), EMB_DIM))
     for w, i in vocab.items():
         emb[i] = word_vec(w)

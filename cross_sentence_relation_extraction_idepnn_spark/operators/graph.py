@@ -3,16 +3,17 @@
 ``featurize_pair`` is the ``mapInPandas`` stage that turns each
 candidate window into inter-sentential dependency-path features:
 deterministic parse (G1), global graph with root chaining (G2), exact
-entity-index resolution (G3), BFS shortest path = iSDP (G4), flattened
-ADP tree schedule (G5), position/POS/IOB index arrays (M11–M13).
+entity-index resolution (G3), the tree path between the two entity
+tokens = iSDP (G4), flattened ADP tree schedule (G5), position/POS/IOB
+index arrays (M11–M13).
 
 The reference re-parses every candidate through a JVM subprocess
 (``generate_sdp.py:24-28,70-79``) — the dominant hot spot (SURVEY.md
 §4.2.1). Here parsing is in-process, batched, and *narrow*: no shuffle;
 Arrow batches cross the JVM↔Python boundary once.
 
-Rows whose SDP is unreachable or that tokenize empty are routed to the
-quarantine side-output (F3/F5 semantics,
+Rows whose entity index falls outside the window or that tokenize empty
+are routed to the quarantine side-output (F3/F5 semantics,
 ``generate_bb_training_data_2016.py:765-769``) via ``ok = false`` —
 the pipeline splits on the flag so both sides stay observable.
 """
@@ -188,9 +189,10 @@ def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
                     feats.append(
                         {"ok": True, **f, "ent_pres_e1": f1, "ent_pres_e2": f2}
                     )
-            out = pd.concat(
-                [pdf.reset_index(drop=True), pd.DataFrame(feats)], axis=1
-            )
+            # only the declared feature columns: the kernel's row also
+            # carries its window's in-memory tree arrays
+            feat_df = pd.DataFrame(feats, columns=["ok", *empty])
+            out = pd.concat([pdf.reset_index(drop=True), feat_df], axis=1)
             yield out
 
     return windows.mapInPandas(run, schema=out_schema)
@@ -207,9 +209,10 @@ def duck_sdp_ctes() -> str:
     The deterministic grammar (G1, ``kernels.head_of``) makes every
     candidate-window graph a TREE: per-sentence heads always point
     left (token 0 = root) and adjacent sentence roots are chained
-    (G2, reference ``generate_sdp.py:106``), so the BFS shortest path
-    (G4, ``generate_sdp.py:111-114``) is the unique tree path and its
-    length has a closed form:
+    (G2, reference ``generate_sdp.py:106``), so the shortest path
+    (G4, ``generate_sdp.py:111-114``) is the unique tree path the
+    kernel walks (``kernels.featurize_window``) and its length has a
+    closed form:
 
     - ``depth(i)`` (edges to the sentence root): with ``A(i)`` = count
       of *anchor* tokens (``h15(word) % 3 == 0``) strictly before *i*
@@ -217,7 +220,7 @@ def duck_sdp_ctes() -> str:
       ``A(i) = 0`` else ``a1 + A(i)`` (each anchor chains to the
       previous anchor; the prefix before the first anchor is the
       consecutive fallback chain ``i → i-1 → …``). Verified against
-      the kernel BFS on randomized sentences (test_kernels).
+      the kernel's tree path on randomized sentences (test_kernels).
     - cross-sentence pair: ``depth(t1) + |sent2 - sent1| + depth(t2)``
       (the only inter-sentence edges are root–root).
     - same-sentence pair: min over common ancestors *w* of
@@ -363,7 +366,7 @@ def duck_triples(gold_max_hops: int, predicate: str) -> str:
 
 def duck_position_bounds() -> str:
     """Oracle for A4: the SDP path starts at e1 and ends at e2
-    (``featurize_window``: path = bfs(g1→g2)), so p1 = 0 and
+    (``featurize_window``: the tree path g1 → g2), so p1 = 0 and
     p2 = len-1 and the signed-distance bounds collapse to
     ±max(sdp_dist) with pos_vocab_size = 2·max(sdp_dist)."""
     return f"""

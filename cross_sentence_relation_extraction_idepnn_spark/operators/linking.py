@@ -221,7 +221,7 @@ def connected_components(
     alternating large-star/small-star rounds scale out. Both produce the
     identical (surface, min-reachable-label) mapping.
     """
-    if n_nodes is None:
+    if n_nodes is None or n_nodes <= driver_threshold:
         # ONE capped collect both sizes the node set and, when it fits
         # the driver union-find, delivers the surfaces — replacing the
         # count + collect pair (r6, guide §1.2: the node subtree of a
@@ -236,15 +236,6 @@ def connected_components(
                 _uf_components(surfaces, pairs),
                 schema="surface string, component string",
             )
-        n_nodes = driver_threshold + 1  # distributed path; exact n unused
-    if n_nodes <= driver_threshold:
-        surfaces = [r[0] for r in nodes.select("surface").collect()]
-        pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-        return local_frame(
-            nodes.sparkSession,
-            _uf_components(surfaces, pairs),
-            schema="surface string, component string",
-        )
     # ------- alternating large-star / small-star (Kiveris et al. 2014)
     # O(log n) rounds, each a pair of groupBy-min shuffles — no
     # O(diameter) label walks, so long mention chains converge fast.

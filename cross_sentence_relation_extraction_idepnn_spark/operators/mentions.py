@@ -28,27 +28,22 @@ from pyspark.sql import functions as F
 from ..config import alias_rows, duck_alias_values
 
 
-_ALIAS_DF_CACHE: dict[int, DataFrame] = {}
-
-
 def alias_df(spark: SparkSession) -> DataFrame:
     """Static alias dictionary as a DataFrame over a JVM
     ``LocalRelation`` (``session.local_frame``): the broadcast side of
     the mention join is built on the driver without a Python worker
-    task. Memoized per session: a rebuild through ``local_frame``
+    task. A ``plan_memo`` entry: a rebuild through ``local_frame``
     costs ~15 ms of driver time (Arrow serialization plus py4j
     round trips, measured on 4 cores), and the rows never change."""
-    from ..session import local_frame
+    from ..session import local_frame, plan_memo
 
-    key = spark.sparkContext.applicationId  # unique per live context
-    df = _ALIAS_DF_CACHE.get(key)
-    if df is None:
-        df = local_frame(
+    return plan_memo(
+        spark,
+        ("alias_df",),
+        lambda: local_frame(
             spark, alias_rows(), "surface string, entity_id string, ner_tag string"
-        )
-        _ALIAS_DF_CACHE.clear()  # one live session at a time in practice
-        _ALIAS_DF_CACHE[key] = df
-    return df
+        ),
+    )
 
 
 def detect_mentions(

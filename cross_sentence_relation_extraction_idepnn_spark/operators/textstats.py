@@ -256,10 +256,13 @@ def _doc_fingerprint_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             did_col = batch.column("doc_id")
             texts = batch.column("text").to_pylist()
-            o_min: list[int] = []
-            o_xor: list[int] = []
+            o_min: list[int | None] = []
+            o_xor: list[int | None] = []
             for text in texts:
-                text = text or ""
+                if text is None:  # md5(NULL) is NULL in the Column form
+                    o_min.append(None)
+                    o_xor.append(None)
+                    continue
                 n_max = max(len(text) - (K - 1), 1)
                 mn = (1 << 62)
                 xr = 0

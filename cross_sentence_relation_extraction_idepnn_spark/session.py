@@ -15,6 +15,7 @@ builds analyzes to a JVM ``LocalRelation`` that needs no task at all.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -91,42 +92,28 @@ def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFr
 
 # ---------------------------------------------------- parquet reader memo
 
-_READER_CACHE: dict[tuple[str, str], "object"] = {}
-
-
 def read_parquet_cached(spark: SparkSession, path: str):
-    """``spark.read.parquet`` with a per-(context, path) memo of the
-    resulting DataFrame. Each fresh read costs ~0.15-0.4 s of driver
-    time (file listing + schema inference round trips) and the
+    """``spark.read.parquet`` memoized per (context, path) as a
+    :func:`plan_memo` entry. Each fresh read costs ~0.15-0.4 s of
+    driver time (file listing + schema inference round trips) and the
     operators re-read the same static corpus tables for every query
     build — measured round 4, this was a third of the cold plan-build
     cost. DataFrames are immutable, so reuse is safe for static
     inputs; callers that REWRITE a path mid-session (none of the
     shipped operators do) must call ``invalidate_parquet_cache``."""
-    key = (spark.sparkContext.applicationId, path)
-    df = _READER_CACHE.get(key)
-    if df is None:
-        if len(_READER_CACHE) > 64:
-            _READER_CACHE.clear()
-        df = spark.read.parquet(path)
-        _READER_CACHE[key] = df
-    return df
+    return plan_memo(spark, ("parquet", path), lambda: spark.read.parquet(path))
 
 
 def invalidate_parquet_cache(path: str | None = None) -> None:
-    """Drop memoized readers (all, or those for one path) together with
-    every memoized plan built on them, so the next build re-lists the
-    rewritten files. A plan is built on ``path`` when its input files
-    lie under it; an entry whose plan can no longer be analyzed (its
-    session is gone) is dropped too."""
-    if path is None:
-        _READER_CACHE.clear()
-        _PLAN_CACHE.clear()
-        return
-    for k in [k for k in _READER_CACHE if k[1] == path]:
-        del _READER_CACHE[k]
-    root = os.path.abspath(path)
-    for k in [k for k, (df, _) in _PLAN_CACHE.items() if _scans_under(df, root)]:
+    """Drop every memoized plan built on ``path`` (every plan when
+    ``path`` is None), readers included, so the next build re-lists
+    the rewritten files. A plan is built on ``path`` when its input
+    files lie under it; an entry whose plan can no longer be analyzed
+    (its session is gone) is dropped too."""
+    root = None if path is None else os.path.abspath(path)
+    for k in [
+        k for k, (df, _) in _PLAN_CACHE.items() if root is None or _scans_under(df, root)
+    ]:
         del _PLAN_CACHE[k]
 
 
@@ -161,8 +148,10 @@ def _input_files(df) -> list[str]:
 
 # ---------------------------------------------------- lazy plan memo (r6)
 
-# key → (lazy plan, the inputs it was built from)
-_PLAN_CACHE: dict[tuple, tuple] = {}
+# key → (lazy plan, the inputs it was built from), least recently used
+# first; past _PLAN_CACHE_MAX entries the oldest is dropped
+_PLAN_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
+_PLAN_CACHE_MAX = 512
 
 
 def input_plan_memo(key: tuple, inputs: tuple, build):
@@ -180,14 +169,15 @@ def input_plan_memo(key: tuple, inputs: tuple, build):
     parquet."""
     app = inputs[0].sparkSession.sparkContext.applicationId
     k = (app,) + tuple(key) + tuple(id(x) for x in inputs)
-    entry = _PLAN_CACHE.get(k)
+    entry = _hit(k)
     return entry[0] if entry is not None else _remember(k, build(), inputs)
 
 
 def plan_memo(spark: SparkSession, key: tuple, build):
-    """Per-(application, key) memo of a LAZY DataFrame plan — the
-    :func:`read_parquet_cached` pattern generalized to operator
-    subtrees. Measured round 6: driver-side plan CONSTRUCTION (py4j
+    """Per-(application, key) memo of a LAZY DataFrame plan: the
+    driver's one memo, an LRU of ``_PLAN_CACHE_MAX`` entries shared by
+    readers (:func:`read_parquet_cached`) and operator subtrees.
+    Measured round 6: driver-side plan CONSTRUCTION (py4j
     Column-tree building) was 0.5-4.5 s per composite dedup query —
     up to half the end-to-end query time at sf0.1 — and the same
     subtree (shingle arrays, band signatures, simhash table) is
@@ -198,7 +188,7 @@ def plan_memo(spark: SparkSession, key: tuple, build):
     memo holds a query plan, not data). Callers must include every
     non-default parameter in ``key``."""
     k = (spark.sparkContext.applicationId,) + tuple(key)
-    entry = _PLAN_CACHE.get(k)
+    entry = _hit(k)
     return entry[0] if entry is not None else _remember(k, build(), ())
 
 
@@ -211,7 +201,7 @@ def persisted_memo(spark: SparkSession, key: tuple, build):
     plans, so ``invalidate_parquet_cache(path)`` drops it when it was
     built on ``path``."""
     k = (spark.sparkContext.applicationId,) + tuple(key)
-    entry = _PLAN_CACHE.get(k)
+    entry = _hit(k)
     if entry is not None:
         level = entry[0].storageLevel
         if level.useMemory or level.useDisk:
@@ -219,10 +209,18 @@ def persisted_memo(spark: SparkSession, key: tuple, build):
     return _remember(k, build(), ())
 
 
+def _hit(k: tuple):
+    entry = _PLAN_CACHE.get(k)
+    if entry is not None:
+        _PLAN_CACHE.move_to_end(k)
+    return entry
+
+
 def _remember(k: tuple, df, inputs: tuple):
-    if len(_PLAN_CACHE) > 512:
-        _PLAN_CACHE.clear()
     _PLAN_CACHE[k] = (df, inputs)
+    _PLAN_CACHE.move_to_end(k)
+    if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
+        _PLAN_CACHE.popitem(last=False)
     return df
 
 

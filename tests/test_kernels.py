@@ -331,7 +331,7 @@ def test_closed_form_tree_distance_matches_bfs_randomized():
         return i if not before else anchors[0] + len(before)
 
     def path_to_root(words, i):
-        heads = kernels.heads_of(words)
+        heads = kernels.heads_of(tuple(words))
         p = [i]
         while heads[p[-1]] >= 0:
             p.append(heads[p[-1]])
@@ -417,19 +417,17 @@ def test_window_schedule_matches_tree_schedule():
 
 
 def test_tree_arrays_cache_matches_fallback_levels():
-    """The _tree_arrays fast path (per-window parent/level arrays) must
-    agree with the tree_order fallback used by the staged/Arrow path."""
+    """The per-window parent/level arrays a featurize_window row carries
+    must agree with the tree_order fallback used by the staged/Arrow
+    path."""
     import numpy as np
 
     from cross_sentence_relation_extraction_idepnn_spark import kernels
 
     sw = [["alpha", "beta", "tool"], ["run", "x1", "code", "omega"]]
-    win = kernels._window_structures(
-        tuple(" ".join(w) for w in sw), None
-    )
-    offsets, all_words, adj, parents, order = win
-    ent = kernels._tree_arrays[id(parents)]
-    assert ent[0] is parents
+    row = kernels.featurize_window([" ".join(w) for w in sw], 0, 1, 1, 2, 0)
+    parents, order = row["parents"], row["tree_order"]
+    parr, larr = row["tree_arrays"]
     n = len(parents)
     l = [0] * (n + 1)
     for u in order:
@@ -437,5 +435,23 @@ def test_tree_arrays_cache_matches_fallback_levels():
             pu = parents[u]
             if pu < n and l[u] + 1 > l[pu]:
                 l[pu] = l[u] + 1
-    assert np.array_equal(ent[1], np.asarray(parents))
-    assert np.array_equal(ent[2], np.asarray(l[:n]))
+    assert np.array_equal(parr, np.asarray(parents))
+    assert np.array_equal(larr, np.asarray(l[:n]))
+
+
+def test_kernel_memos_are_bounded():
+    """Every executor-local memo is an lru_cache with a finite bound, so
+    a long-lived Python worker cannot grow without limit."""
+    from cross_sentence_relation_extraction_idepnn_spark import kernels
+
+    memos = [f for f in vars(kernels).values() if hasattr(f, "cache_info")]
+    assert {f.__name__ for f in memos} >= {
+        "_h15w", "pos_tag", "word_vec", "heads_of", "_sentence_postorder",
+        "_window_structures",
+    }
+    for f in memos:
+        assert f.cache_info().maxsize is not None, f.__name__
+    cap = kernels.word_vec.cache_info().maxsize
+    for i in range(cap + 1):
+        kernels.word_vec(f"w{i}")
+    assert kernels.word_vec.cache_info().currsize <= cap

@@ -79,3 +79,24 @@ def test_featurize_window_endpoints_and_iob(sents, data):
         assert f["sdp_iob"][0] == 1 and f["sdp_iob"][-1] == 2
     assert len(f["sdp_words"]) == len(f["sdp_gidx"]) == len(f["pi_e1"])
     assert all(0 <= d <= K.MAX_POS for d in f["pi_e1"] + f["pi_e2"])
+
+
+@settings(max_examples=60, deadline=None)
+@given(sents_st, st.data())
+def test_featurize_window_tree_walk_equals_bfs(sents, data):
+    """The kernel's SDP (a climb up the window tree) is the BFS shortest
+    path of the reference graph, node for node."""
+    texts = [" ".join(s) for s in sents]
+    n = sum(len(s) for s in sents)
+    g1 = data.draw(st.integers(0, n - 1))
+    g2 = data.draw(st.integers(0, n - 1))
+
+    def coords(g):
+        for si, s in enumerate(sents):
+            if g < len(s):
+                return si, g
+            g -= len(s)
+
+    (s1, t1), (s2, t2) = coords(g1), coords(g2)
+    f = K.featurize_window(texts, s1, t1, s2, t2, 0)
+    assert f["sdp_gidx"] == K.bfs_path(n, K.build_edges(sents)[0], g1, g2)

@@ -141,3 +141,33 @@ def test_invalidate_parquet_cache_drops_the_persisted_kg(spark, sf_dir, tmp_path
     assert new != old
     # an explicit argument skips the memo: a fresh build on the new rows
     assert new == kg_rows(materialize_kg(spark, d, threshold=SCORE_THRESHOLD))
+
+
+def test_plan_cache_evicts_least_recently_used(spark, sf_dir):
+    """A plan that was just used survives the cache filling past its
+    bound; the entries dropped are the least recently used ones."""
+    session._PLAN_CACHE.clear()
+    plan = transcripts(spark, sf_dir)
+    filler = session.local_frame(spark, [], "x int")
+    i = 0
+    while len(session._PLAN_CACHE) < session._PLAN_CACHE_MAX:
+        session.plan_memo(spark, ("lru-filler", i), lambda: filler)
+        i += 1
+    assert transcripts(spark, sf_dir) is plan  # a hit: now most recent
+    for _ in range(session._PLAN_CACHE_MAX - 1):
+        session.plan_memo(spark, ("lru-filler", i), lambda: filler)
+        i += 1
+    assert len(session._PLAN_CACHE) == session._PLAN_CACHE_MAX
+    assert transcripts(spark, sf_dir) is plan
+    session._PLAN_CACHE.clear()
+
+
+def test_invalidate_all_rebuilds_the_alias_table(spark):
+    from cross_sentence_relation_extraction_idepnn_spark.operators.mentions import (
+        alias_df,
+    )
+
+    old = alias_df(spark)
+    assert alias_df(spark) is old
+    session.invalidate_parquet_cache(None)
+    assert alias_df(spark) is not old

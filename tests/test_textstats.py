@@ -636,3 +636,33 @@ def test_doc_fingerprint_arrow_twin_matches_column_form(spark, sf_dir):
     b = _doc_fingerprint_arrow(spark, sf_dir)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_doc_fingerprint_twins_agree_on_null_text(spark, tmp_path):
+    """NULL text has no shingles: both fingerprint forms give NULL
+    ``fp_min``/``fp_xor`` for it (md5(NULL) is NULL), while empty text
+    still hashes its one empty window."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cross_sentence_relation_extraction_idepnn_spark.operators.textstats import (
+        _doc_fingerprint_arrow,
+        doc_fingerprint,
+    )
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([1, 2, 3], pa.int64()),
+                "text": pa.array(["the scan runs a table", None, ""], pa.string()),
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    a = doc_fingerprint(spark, str(tmp_path))
+    b = _doc_fingerprint_arrow(spark, str(tmp_path))
+    assert a.schema == b.schema
+    rows_a = a.orderBy("doc_id").collect()
+    assert rows_a == b.orderBy("doc_id").collect()
+    assert (rows_a[1].fp_min, rows_a[1].fp_xor) == (None, None)
+    assert rows_a[2].fp_min is not None
