@@ -1,6 +1,6 @@
 """Cross-sentence candidate-pair generation + entity tagging.
 
-SURVEY.md §2.3 J3 (self-join pair generator), §2.2 F2 (k-window
+SURVEY.md §2.3 J3 (band self-join pair generator), §2.2 F2 (k-window
 filter), §2.5 W4 (k = |Δ sent_idx|), W5 (nearest-pair selection), W7
 (stable cand_id), §2.8 T3 (``<e1>``/``<e2>`` tag insertion).
 
@@ -19,12 +19,23 @@ Reference semantics:
 
 Scale notes:
 
-- The self-join is keyed by ``conv_id`` — the single hot shuffle of the
-  pipeline. Long conversations skew it: handled by AQE skew-join
-  splitting plus optional salting (``plans.pipeline``).
-- ``cand_id`` is per-conversation (``conv_id#seq``), never a global
-  ``row_number`` over one partition — a global window would serialize
-  at 100 TB.
+- One pair generator, a band join: a mention's ``bucket`` is
+  ``sent_idx DIV (max_k + 1)``. Each OBJ mention is exploded to
+  buckets b−1, b and b+1; the join keys on ``(conv_id, bucket)`` and
+  then keeps ``k ≤ max_k``. Why no pair is lost: buckets are
+  ``max_k + 1`` sentences wide, so two sentences at most ``max_k``
+  apart lie in the same or adjacent buckets, and the OBJ copy at the
+  OP's bucket meets the OP. Why none is doubled: the three copies of
+  an OBJ carry distinct buckets, and an OP has exactly one, so each
+  in-band pair meets once — no dedup step.
+- The join emits only pairs fewer than ``2 * (max_k + 1)`` sentences
+  apart instead of all n_OP·n_OBJ of a conversation, and a long
+  conversation spreads over ceil(n_sents / (max_k + 1)) join keys, so
+  no one reducer takes the whole of it; AQE skew-join splitting covers
+  residual imbalance.
+- ``cand_id`` is per-conversation (``conv#e1#e2``, or ``conv#seq`` in
+  ``candidate_pairs``), never a global ``row_number`` over one
+  partition — a global window would serialize at 100 TB.
 """
 
 from __future__ import annotations
@@ -32,91 +43,86 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import MAX_K, duck_alias_values
+from ..config import MAX_K
 from .mentions import duck_mentions_cte
 from .segmentation import duck_with_prefix
 
 CAND_ORDER = ["k", "sent1", "tok1", "sent2", "tok2"]
+# candidate_pairs' column order, as the DuckDB oracle emits it
+PAIR_COLS = ["conv_id", "e1_id", "e1_surface", "sent1", "tok1",
+             "e2_id", "e2_surface", "sent2", "tok2", "k"]
 
 
 def candidate_pairs(mentions: DataFrame, max_k: int = MAX_K) -> DataFrame:
-    """mentions → candidate pairs, nearest pair per (conv, e1, e2).
+    """mentions → candidate pairs, nearest pair per (conv, e1, e2), with
+    the W7 per-conversation numbering the DuckDB oracle checks.
 
-    Output: ``(conv_id, e1_id, e2_id, e1_surface, e2_surface,
-    sent1, tok1, sent2, tok2, k, cand_seq, cand_id)``.
+    Output: ``(conv_id, e1_id, e1_surface, sent1, tok1, e2_id,
+    e2_surface, sent2, tok2, k, cand_seq, cand_id)``; the pairs are
+    :func:`candidate_pairs_fast`'s, ``cand_id`` is ``conv_id#cand_seq``.
+    Construction memoized on the mention table's identity (r6).
+    """
+    from ..session import input_plan_memo
+
+    def build() -> DataFrame:
+        w_seq = Window.partitionBy("conv_id").orderBy(*CAND_ORDER, "e1_id", "e2_id")
+        return (
+            candidate_pairs_fast(mentions, max_k)
+            .select(*PAIR_COLS)
+            .withColumn("cand_seq", F.row_number().over(w_seq).cast("int"))
+            .withColumn("cand_id", F.concat_ws("#", "conv_id", "cand_seq"))
+        )
+
+    return input_plan_memo(("candidate_pairs", max_k), (mentions,), build)
+
+
+def candidate_pairs_fast(mentions: DataFrame, max_k: int = MAX_K) -> DataFrame:
+    """The package's one pair generator (J3/F2/W4/W5), used by the
+    pipeline's candidate stage: ``(conv_id, e1_id, e2_id, e1_surface,
+    sent1, tok1, e2_surface, sent2, tok2, k, cand_id)``.
+
+    - The OP⋈OBJ join is a band join on ``(conv_id, bucket)`` with
+      ``bucket = sent_idx DIV (max_k + 1)`` (see the module notes).
+    - W5 nearest-pair selection runs as ``min_by`` aggregation (one
+      shuffle with map-side partial aggregation), not a ``row_number``
+      window (exchange + full sort).
+    - ``cand_id`` is derived from the group key (``conv#e1#e2`` —
+      unique after nearest-pair selection, and the key
+      ``graph.duck_triples`` pins), so no numbering exchange is needed.
+
     Construction memoized on the mention table's identity (r6).
     """
     from ..session import input_plan_memo
 
     return input_plan_memo(
-        ("candidate_pairs", max_k),
+        ("candidate_pairs_fast", max_k),
         (mentions,),
-        lambda: _candidate_pairs_build(mentions, max_k),
+        lambda: _band_pairs(mentions, int(max_k)),
     )
 
 
-def _candidate_pairs_build(mentions: DataFrame, max_k: int) -> DataFrame:
-    m1 = mentions.filter(F.col("ner_tag") == "OP").select(
-        "conv_id",
-        F.col("entity_id").alias("e1_id"),
-        F.col("surface").alias("e1_surface"),
-        F.col("sent_idx").alias("sent1"),
-        F.col("tok_idx").alias("tok1"),
-    )
-    m2 = mentions.filter(F.col("ner_tag") == "OBJ").select(
-        "conv_id",
-        F.col("entity_id").alias("e2_id"),
-        F.col("surface").alias("e2_surface"),
-        F.col("sent_idx").alias("sent2"),
-        F.col("tok_idx").alias("tok2"),
-    )
-    pairs = (
-        m1.join(m2, "conv_id")
-        .withColumn("k", F.abs(F.col("sent2") - F.col("sent1")).cast("int"))
-        .filter(F.col("k") <= max_k)
-    )
-    # W5: nearest pair per (conv, e1, e2) — deterministic tiebreak.
-    w_near = Window.partitionBy("conv_id", "e1_id", "e2_id").orderBy(*CAND_ORDER)
-    near = (
-        pairs.withColumn("rn", F.row_number().over(w_near))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    # W7: stable per-conversation candidate numbering.
-    w_seq = Window.partitionBy("conv_id").orderBy(*CAND_ORDER, "e1_id", "e2_id")
-    return near.withColumn("cand_seq", F.row_number().over(w_seq).cast("int")).withColumn(
-        "cand_id", F.concat_ws("#", "conv_id", "cand_seq")
-    )
+def _bucket(max_k: int) -> str:
+    """The band key of a mention: buckets are ``max_k + 1`` sentences
+    wide, so an in-band pair is at most one bucket apart."""
+    return f"sent_idx DIV {max_k + 1}"
 
 
-def candidate_pairs_fast(mentions: DataFrame, max_k: int = MAX_K) -> DataFrame:
-    """The pipeline's candidate stage (fast and checkpointed runs):
-    the rows of :func:`candidate_pairs` without ``cand_seq``, on a
-    cheaper physical plan.
-
-    - W5 nearest-pair selection runs as ``min_by`` aggregation (one
-      shuffle with map-side partial aggregation) instead of a
-      ``row_number`` window (exchange + full sort).
-    - ``cand_id`` is derived from the group key (``conv#e1#e2`` —
-      unique after nearest-pair selection, and the key
-      ``graph.duck_triples`` pins), dropping the second
-      per-conversation numbering exchange entirely.
-
-    ``candidate_pairs`` stays as the oracle-parity operator (the
-    DuckDB-checked ``cand_seq`` numbering is part of W7 semantics).
-    """
+def _band_pairs(mentions: DataFrame, max_k: int) -> DataFrame:
+    b = _bucket(max_k)
     m1 = mentions.where("ner_tag = 'OP'").selectExpr(
-        "conv_id", "entity_id AS e1_id", "surface AS e1_surface",
-        "sent_idx AS sent1", "tok_idx AS tok1",
+        "conv_id", f"{b} AS bucket", "entity_id AS e1_id",
+        "surface AS e1_surface", "sent_idx AS sent1", "tok_idx AS tok1",
     )
+    # each OBJ mention meets the OPs of its own and both adjacent buckets
     m2 = mentions.where("ner_tag = 'OBJ'").selectExpr(
-        "conv_id", "entity_id AS e2_id", "surface AS e2_surface",
+        "conv_id", f"explode(array({b} - 1, {b}, {b} + 1)) AS bucket",
+        "entity_id AS e2_id", "surface AS e2_surface",
         "sent_idx AS sent2", "tok_idx AS tok2",
     )
     pairs = (
-        m1.join(m2, "conv_id")
+        m1.join(m2, ["conv_id", "bucket"])
         .selectExpr("*", "CAST(abs(sent2 - sent1) AS INT) AS k")
-        .where(f"k <= {int(max_k)}")
+        .where(f"k <= {max_k}")
     )
     order_cols = ", ".join(CAND_ORDER)
     best = pairs.groupBy("conv_id", "e1_id", "e2_id").agg(

@@ -217,9 +217,10 @@ def connected_components(
     dimension table orders of magnitude smaller than the corpus. Below
     ``driver_threshold`` nodes the fixpoint runs as driver-side
     union-find (one collect, zero iterative jobs — the same shortcut
-    GraphFrames-style systems take for small graphs); above it, the
-    alternating large-star/small-star rounds scale out. Both produce the
-    identical (surface, min-reachable-label) mapping.
+    GraphFrames-style systems take for small graphs); above it, or when
+    the edges outnumber ``driver_threshold``, the alternating
+    large-star/small-star rounds scale out. Both produce the identical
+    (surface, min-reachable-label) mapping.
     """
     if n_nodes is None or n_nodes <= driver_threshold:
         # ONE capped collect both sizes the node set and, when it fits
@@ -229,13 +230,15 @@ def connected_components(
         # every extra action over it re-evaluates that prefix).
         head = nodes.select("surface").limit(driver_threshold + 1).collect()
         if len(head) <= driver_threshold:
-            surfaces = [r[0] for r in head]
-            pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-            return local_frame(
-                nodes.sparkSession,
-                _uf_components(surfaces, pairs),
-                schema="surface string, component string",
-            )
+            # the edge collect is capped the same way: past the cap the
+            # edges take the distributed path below
+            pairs = edges.select("src", "dst").limit(driver_threshold + 1).collect()
+            if len(pairs) <= driver_threshold:
+                return local_frame(
+                    nodes.sparkSession,
+                    _uf_components([r[0] for r in head], [(r[0], r[1]) for r in pairs]),
+                    schema="surface string, component string",
+                )
     # ------- alternating large-star / small-star (Kiveris et al. 2014)
     # O(log n) rounds, each a pair of groupBy-min shuffles — no
     # O(diameter) label walks, so long mention chains converge fast.

@@ -3,7 +3,7 @@
 Every entry point runs ONE stage chain::
 
     transcripts → sentences (W1/T1) → mentions (J7/J2)
-      → candidates (J3/F2/W4/W5, optionally salted)
+      → candidates (J3/F2/W4/W5: band join on (conv_id, bucket))
       → scored: windows → featurize (G1–G5) + score (M1–M7) in one
         fused Arrow kernel; quarantine = the rows with ``ok = false``
       → triples (threshold) → canonicalize (G6) → kg (dedup A10)
@@ -17,28 +17,34 @@ produces the identical triple table. Both modes build the same plans:
 their outputs agree on every column, ``cand_id`` (``conv#e1#e2``)
 included.
 
-Shuffle topology: segmentation's sent_idx window and the candidate
-self-join both key on ``conv_id`` — one logical exchange; the dedup
-groupBy keys on (subj, pred, obj). Everything else is narrow.
+Shuffle topology: segmentation's sent_idx window keys on ``conv_id``,
+the candidate band join on ``(conv_id, bucket)``, nearest-pair
+selection on (conv_id, e1, e2) and the dedup groupBy on
+(subj, pred, obj). Everything else is narrow.
 
-Skew: a single multi-million-turn conversation would hot-spot the
-``conv_id`` shuffle. ``salted_candidate_pairs`` splits each
-conversation into overlapping sentence blocks (overlap = MAX_K, so no
-cross-pair is lost — SURVEY.md §7.3.4) and dedupes pairs that fall in
-two blocks; AQE skew-join splitting covers residual imbalance.
+Skew: a single multi-million-turn conversation would hot-spot a
+``conv_id``-keyed pair join. The band join keys on
+``(conv_id, bucket)`` with ``bucket = sent_idx DIV (MAX_K + 1)`` and
+meets each OBJ mention with the OPs of its own and both adjacent
+buckets: two sentences at most MAX_K apart are at most one bucket
+apart, so no pair is lost, and each OBJ copy carries a distinct
+bucket, so no pair meets twice (SURVEY.md §7.3.4;
+``operators/candidates.py``). A conversation of n sentences spreads
+over ceil(n / (MAX_K + 1)) join keys; AQE skew-join splitting covers
+residual imbalance.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..config import MAX_K, SCORE_THRESHOLD
 from ..session import input_plan_memo, persisted_memo, track_cache
-from ..operators.candidates import CAND_ORDER, candidate_pairs_fast
+from ..operators.candidates import candidate_pairs_fast
 from ..operators.graph import candidate_windows
 from ..operators.linking import canonicalize, dedup_triples, rekey_canonical
 from ..operators.mentions import detect_mentions
@@ -48,64 +54,8 @@ from ..sources.transcripts import transcripts
 from ..training import load_weights
 from .checkpoint import Checkpointer
 
-SALT_BLOCK = 64  # sentences per salt block (>> MAX_K)
-
 # (stage name, build, upstream stage names) → the stage's DataFrame
 StageHook = Callable[[str, Callable[[], DataFrame], list[str]], DataFrame]
-
-
-def salted_candidate_pairs(
-    mentions: DataFrame, max_k: int = MAX_K, block: int = SALT_BLOCK
-) -> DataFrame:
-    """J3 with skew salting: mentions are assigned to sentence blocks of
-    ``block`` sentences; a mention within ``max_k`` of a block's start
-    is replicated into the previous block, so every pair with
-    ``|Δsent| ≤ max_k`` co-occurs in at least one block. The self-join
-    keys on (conv_id, salt) — a hot conversation spreads over
-    ceil(n_sents/block) reducers. Duplicated pairs collapse via
-    dropDuplicates before nearest-pair selection, which repartitions by
-    the *finer* (conv_id, e1, e2) key anyway."""
-    m = mentions.withColumn("salt", (F.col("sent_idx") / block).cast("int"))
-    spill = (
-        mentions.filter((F.col("sent_idx") % block < max_k) & (F.col("sent_idx") >= block))
-        .withColumn("salt", (F.col("sent_idx") / block).cast("int") - 1)
-    )
-    salted = m.unionByName(spill)
-    m1 = salted.filter(F.col("ner_tag") == "OP").select(
-        "conv_id",
-        "salt",
-        F.col("entity_id").alias("e1_id"),
-        F.col("surface").alias("e1_surface"),
-        F.col("sent_idx").alias("sent1"),
-        F.col("tok_idx").alias("tok1"),
-    )
-    m2 = salted.filter(F.col("ner_tag") == "OBJ").select(
-        "conv_id",
-        "salt",
-        F.col("entity_id").alias("e2_id"),
-        F.col("surface").alias("e2_surface"),
-        F.col("sent_idx").alias("sent2"),
-        F.col("tok_idx").alias("tok2"),
-    )
-    pairs = (
-        m1.join(m2, ["conv_id", "salt"])
-        .withColumn("k", F.abs(F.col("sent2") - F.col("sent1")).cast("int"))
-        .filter(F.col("k") <= max_k)
-        .drop("salt")
-        .dropDuplicates(
-            ["conv_id", "e1_id", "e2_id", "sent1", "tok1", "sent2", "tok2"]
-        )
-    )
-    w_near = Window.partitionBy("conv_id", "e1_id", "e2_id").orderBy(*CAND_ORDER)
-    near = (
-        pairs.withColumn("rn", F.row_number().over(w_near))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    w_seq = Window.partitionBy("conv_id").orderBy(*CAND_ORDER, "e1_id", "e2_id")
-    return near.withColumn(
-        "cand_seq", F.row_number().over(w_seq).cast("int")
-    ).withColumn("cand_id", F.concat_ws("#", "conv_id", "cand_seq"))
 
 
 def _fast(name: str, build: Callable[[], DataFrame], upstream: list[str]) -> DataFrame:
@@ -130,13 +80,6 @@ def _checkpointed(spark: SparkSession, warehouse: str, resume: bool) -> StageHoo
     )
 
 
-def _candidates(mens: DataFrame, max_k: int, salted: bool) -> DataFrame:
-    pairs = salted_candidate_pairs if salted else candidate_pairs_fast
-    return input_plan_memo(
-        ("candidates", max_k, salted), (mens,), lambda: pairs(mens, max_k=max_k)
-    )
-
-
 def _scored(cands: DataFrame, sents: DataFrame, weights, tokenizer: str) -> DataFrame:
     # the entry holds the weights object, so its id stays unique
     return input_plan_memo(
@@ -154,7 +97,6 @@ def _chain(
     stage: StageHook,
     threshold: float = SCORE_THRESHOLD,
     max_k: int = MAX_K,
-    salted: bool = False,
     weights=None,
     segmenter=None,
     tokenizer: str = "split",
@@ -181,7 +123,7 @@ def _chain(
         ["sentences"],
     )
     cands = stage(
-        "candidates", lambda: _candidates(mens, max_k, salted), ["mentions"]
+        "candidates", lambda: candidate_pairs_fast(mens, max_k), ["mentions"]
     )
     scored = stage(
         "scored",
@@ -210,7 +152,6 @@ def scored_from_transcripts(
     spark: SparkSession,
     tdf: DataFrame,
     max_k: int = MAX_K,
-    salted: bool = False,
     weights=None,
     segmenter=None,
     tokenizer: str = "split",
@@ -219,7 +160,7 @@ def scored_from_transcripts(
     ``emit_triples`` and the official-eval ``.a2`` assembly
     (``a2_annotation_lines``)."""
     return _chain(
-        spark, tdf, _fast, max_k=max_k, salted=salted, weights=weights,
+        spark, tdf, _fast, max_k=max_k, weights=weights,
         segmenter=segmenter, tokenizer=tokenizer,
     )[1]
 
@@ -228,7 +169,6 @@ def scored_from_shared(
     sents: DataFrame,
     mens: DataFrame,
     max_k: int = MAX_K,
-    salted: bool = False,
     weights=None,
     tokenizer: str = "split",
 ) -> DataFrame:
@@ -236,7 +176,7 @@ def scored_from_shared(
     (ideally persisted) sentence and mention tables, memoized on
     (sents, mens, weights) identity like the chain itself."""
     weights = weights if weights is not None else load_weights()
-    return _scored(_candidates(mens, max_k, salted), sents, weights, tokenizer)
+    return _scored(candidate_pairs_fast(mens, max_k), sents, weights, tokenizer)
 
 
 def triples_from_transcripts(
@@ -244,7 +184,6 @@ def triples_from_transcripts(
     tdf: DataFrame,
     threshold: float = SCORE_THRESHOLD,
     max_k: int = MAX_K,
-    salted: bool = False,
     weights=None,
     segmenter=None,
     tokenizer: str = "split",
@@ -259,7 +198,7 @@ def triples_from_transcripts(
     (parity-checked against a single-node numpy pipeline in
     ``tests/test_parity.py``)."""
     return _chain(
-        spark, tdf, _fast, threshold=threshold, max_k=max_k, salted=salted,
+        spark, tdf, _fast, threshold=threshold, max_k=max_k,
         weights=weights, segmenter=segmenter, tokenizer=tokenizer,
     )[2]
 
@@ -270,7 +209,6 @@ def extract_triples(
     warehouse: str | None = None,
     threshold: float = SCORE_THRESHOLD,
     max_k: int = MAX_K,
-    salted: bool = False,
     resume: bool = True,
     weights=None,
     segmenter=None,
@@ -286,7 +224,7 @@ def extract_triples(
     stage = _fast if warehouse is None else _checkpointed(spark, warehouse, resume)
     return _chain(
         spark, transcripts(spark, sf_dir), stage, threshold=threshold,
-        max_k=max_k, salted=salted, weights=weights, segmenter=segmenter,
+        max_k=max_k, weights=weights, segmenter=segmenter,
         tokenizer=tokenizer,
     )[2]
 

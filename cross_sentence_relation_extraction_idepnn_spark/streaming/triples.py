@@ -80,8 +80,9 @@ def sessionize_turns(
     State bound (``max_turns``): a single never-idle conversation would
     otherwise grow state without limit. When the buffer reaches
     ``max_turns``, the whole buffered block is emitted immediately and
-    only the LAST ``overlap`` turns stay in state — the
-    salted_candidate_pairs argument applies verbatim: every turn yields
+    only the LAST ``overlap`` turns stay in state — the band-join
+    argument of ``operators/candidates.py`` (no pair within MAX_K
+    sentences is split apart) applies here too: every turn yields
     ≥1 sentence, so an ``overlap`` of MAX_K turns keeps every candidate
     pair with sentence distance ≤ MAX_K co-resident in at least one
     emitted block. Overlap turns are emitted twice (once per adjacent

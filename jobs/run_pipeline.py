@@ -21,15 +21,16 @@ import json
 import sys
 import time
 
+from cross_sentence_relation_extraction_idepnn_spark.config import MAX_K, SCORE_THRESHOLD
+
 
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--sf-dir", required=True, help="input table directory")
     p.add_argument("--output", required=True, help="KG output path")
     p.add_argument("--checkpoints", default=None, help="resumable stage warehouse")
-    p.add_argument("--threshold", type=float, default=0.5)
-    p.add_argument("--max-k", type=int, default=3)
-    p.add_argument("--salted", action="store_true", help="skew-salted candidate join")
+    p.add_argument("--threshold", type=float, default=SCORE_THRESHOLD)
+    p.add_argument("--max-k", type=int, default=MAX_K)
     p.add_argument("--buckets", type=int, default=16)
     args = p.parse_args(argv)
 
@@ -52,7 +53,6 @@ def main(argv: list[str] | None = None) -> None:
         warehouse=args.checkpoints,
         threshold=args.threshold,
         max_k=args.max_k,
-        salted=args.salted,
     )
     out = write_triples(kg, args.output, n_buckets=args.buckets)
     n = out.count()

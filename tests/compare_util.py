@@ -80,3 +80,38 @@ def assert_frames_match(spark_df, con, sql: str) -> pd.DataFrame:
     assert len(spd) == len(dpd), f"row counts differ: {len(spd)} vs {len(dpd)}"
     pd.testing.assert_frame_equal(spd, dpd, check_dtype=True, check_exact=True)
     return spd
+
+
+def assert_candidates_match_reference(mentions, max_k: int) -> pd.DataFrame:
+    """Both candidate-pair generators against DuckDB's all-pairs
+    reference (``duck_candidates_cte``) over the same mention rows:
+    every column, sorted, dtype- and value-exact. ``candidate_pairs``
+    must equal the reference row for row; ``candidate_pairs_fast`` must
+    hold the same pairs under its ``conv#e1#e2`` cand_id. Returns the
+    reference rows."""
+    from cross_sentence_relation_extraction_idepnn_spark.operators.candidates import (
+        candidate_pairs,
+        candidate_pairs_fast,
+        duck_candidates_cte,
+    )
+
+    con = duckdb.connect()
+    con.register("mentions", mentions.toPandas())
+    ref = con.sql(duck_candidates_cte(max_k)).df()
+
+    def exact(got: pd.DataFrame, want: pd.DataFrame) -> None:
+        assert sorted(got.columns) == sorted(want.columns)
+        cols = sorted(want.columns)
+        pd.testing.assert_frame_equal(
+            got[cols].sort_values(cols).reset_index(drop=True),
+            want[cols].sort_values(cols).reset_index(drop=True),
+            check_dtype=True,
+            check_exact=True,
+        )
+
+    exact(candidate_pairs(mentions, max_k).toPandas(), ref)
+    fast_ref = ref.drop(columns=["cand_seq"]).assign(
+        cand_id=ref.conv_id + "#" + ref.e1_id + "#" + ref.e2_id
+    )
+    exact(candidate_pairs_fast(mentions, max_k).toPandas(), fast_ref)
+    return ref

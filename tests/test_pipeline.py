@@ -2,7 +2,7 @@
 
 - per-turn text equality under stable turn ordering (north rule)
 - Spark featurize/score path ≡ pure-numpy oracle on collected windows
-- salted candidate generation ≡ unsalted (skew path loses no pairs)
+- band-join candidate generation ≡ the DuckDB all-pairs reference
 - threshold routing, quarantine behavior, dedup grain
 """
 
@@ -36,12 +36,12 @@ from cross_sentence_relation_extraction_idepnn_spark.operators.segmentation impo
 )
 from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
     extract_triples,
-    salted_candidate_pairs,
 )
 from cross_sentence_relation_extraction_idepnn_spark.sources.transcripts import (
     transcripts,
 )
 from cross_sentence_relation_extraction_idepnn_spark.training import load_weights
+from compare_util import assert_candidates_match_reference
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, sf_dir):
@@ -80,33 +80,76 @@ def test_sentence_offsets_slice_turn_text(spark, sf_dir):
     assert bad == 0
 
 
-def test_salted_equals_unsalted_candidates(spark, sf_dir):
-    """Skew-salted pair generation must produce the identical candidate
-    set (overlap blocks lose no cross-boundary pair). Block size is set
-    below typical conversation length to force real block splits."""
+def test_candidates_equal_reference(spark, sf_dir):
+    """Both pair generators (band join) select exactly the nearest
+    pairs of DuckDB's all-pairs reference over the same mention rows."""
     mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
-    plain = candidate_pairs(mens).toPandas()
-    salted = salted_candidate_pairs(mens, block=8).toPandas()
-    cols = sorted(plain.columns)
-    a = plain[cols].sort_values(cols).reset_index(drop=True)
-    b = salted[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    assert len(assert_candidates_match_reference(mens, MAX_K)) > 0
 
 
-def test_fast_candidates_equal_window_variant(spark, sf_dir):
-    """candidate_pairs_fast (min_by aggregation, coordinate cand_id)
-    must select exactly the same nearest pairs as the window-function
-    operator the DuckDB oracle checks."""
-    from cross_sentence_relation_extraction_idepnn_spark.operators.candidates import (
-        candidate_pairs_fast,
+def _boundary_mentions(spark):
+    """Mention rows around the band edges at max_k = 8 (buckets of 9
+    sentences: 0-8, 9-17, 18-26), one scenario per conversation:
+    (OP sentences, OBJ sentences) → whether a pair is in band."""
+    cases = {
+        "c0": ([0], [0]),        # Δ 0 at sent_idx 0
+        "c1": ([0], [8]),        # Δ max_k from sent_idx 0, one bucket
+        "c2": ([5], [13]),       # Δ max_k across edge 8|9, OP first
+        "c3": ([18], [10]),      # Δ max_k across edge 17|18, OBJ first
+        "c4": ([8], [17]),       # Δ max_k + 1, adjacent buckets: out
+        "c5": ([9], [0]),        # Δ max_k + 1, OBJ at sent_idx 0: out
+        "c6": ([0], [26]),       # two buckets apart: out
+        "c7": ([8], [0, 16, 17]),  # Δ max_k tie across both edges
+    }
+    rows = [
+        (conv, tag, f"{conv}_{tag}", f"{tag.lower()}{i}", sent, i)
+        for conv, (ops, objs) in cases.items()
+        for tag, sents in (("OP", ops), ("OBJ", objs))
+        for i, sent in enumerate(sents)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, ner_tag string, entity_id string, surface string, "
+        "sent_idx int, tok_idx int",
     )
 
-    mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
-    cols = ["conv_id", "e1_id", "e2_id", "e1_surface", "e2_surface",
-            "sent1", "tok1", "sent2", "tok2", "k"]
-    a = candidate_pairs(mens).select(cols).toPandas().sort_values(cols).reset_index(drop=True)
-    b = candidate_pairs_fast(mens).select(cols).toPandas().sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+def test_candidates_equal_reference_at_band_edges(spark):
+    """Pairs at Δ = max_k across a bucket edge in both directions, a
+    pair at sent_idx 0, and Δ = max_k + 1 pairs that must stay out,
+    at the MUC6 setting (max_k = 8) and the default."""
+    mens = _boundary_mentions(spark)
+    ref = assert_candidates_match_reference(mens, 8)
+    assert sorted(ref.conv_id) == ["c0", "c1", "c2", "c3", "c7"]
+    assert sorted(ref.k) == [0, 8, 8, 8, 8]
+    assert ref.set_index("conv_id").sent2["c7"] == 0  # tie → lower sent2
+    assert_candidates_match_reference(mens, MAX_K)
+
+
+def test_fast_triples_are_deterministic(spark, sf_dir):
+    """The fast-path triples are the same under one shuffle partition
+    and the session default, and across two runs in one session (the
+    band join moves the candidate shuffle key to (conv_id, bucket))."""
+    from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
+        triples_from_transcripts,
+    )
+
+    def triples():
+        # a new input object: every plan of the chain is built afresh
+        df = triples_from_transcripts(spark, transcripts(spark, sf_dir).select("*"))
+        return sorted(map(str, df.collect())), df
+
+    default, df = triples()
+    assert len(default) > 0
+    assert sorted(map(str, df.collect())) == default
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        one, _ = triples()
+    finally:
+        spark.conf.set(key, prev)
+    assert one == default
 
 
 def test_fused_kernel_equals_staged_path(spark, sf_dir):

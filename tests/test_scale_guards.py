@@ -338,6 +338,23 @@ def test_star_cc_high_diameter_chain(spark):
     assert [r.component for r in comps] == ["c00000"]
 
 
+def test_cc_edge_collect_overflow_takes_distributed_path(spark):
+    """The driver union-find collects at most ``driver_threshold`` edges:
+    a node set under the cap with more edges than it falls through to
+    large-star/small-star and still gives the union-find mapping."""
+    rng = random.Random(7)
+    names = [f"e{i:03d}" for i in range(30)]
+    edges = sorted({tuple(rng.sample(names, 2)) for _ in range(60)})
+    ndf = spark.createDataFrame([(s,) for s in names], "surface string")
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    labels = connected_components(ndf, edf, driver_threshold=40)
+    assert len(names) <= 40 < len(edges)
+    # the driver path returns a local table; the distributed one joins
+    assert "Join" in labels._jdf.queryExecution().analyzed().toString()
+    got = {r.surface: r.component for r in labels.collect()}
+    assert got == _uf_components(names, edges)
+
+
 @pytest.mark.slow
 def test_star_cc_150k_vocabulary_distributed_path(spark):
     """>100k nodes (above DRIVER_CC_MAX_NODES): exercises the REAL

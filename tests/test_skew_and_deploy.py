@@ -5,24 +5,24 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from compare_util import assert_candidates_match_reference
+from cross_sentence_relation_extraction_idepnn_spark.config import MAX_K
 from cross_sentence_relation_extraction_idepnn_spark.operators.candidates import (
-    candidate_pairs,
+    _bucket,
+    candidate_pairs_fast,
 )
 from cross_sentence_relation_extraction_idepnn_spark.operators.mentions import (
     detect_mentions,
 )
 from cross_sentence_relation_extraction_idepnn_spark.operators.segmentation import (
     segment,
-)
-from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
-    salted_candidate_pairs,
 )
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -45,40 +45,32 @@ def _skewed_transcripts(spark, long_turns=600, short_convs=40):
     ).withColumn("ts", F.timestamp_seconds(F.lit(1704067200) + F.col("turn_idx")))
 
 
-def test_salted_pairs_equal_on_adversarial_skew(spark):
-    """The salted skew path must emit the identical candidate set when
-    one conversation is 200× longer than the rest — overlap blocks may
+def test_band_pairs_equal_reference_on_adversarial_skew(spark):
+    """The band join must emit the reference candidate set when one
+    conversation is 200× longer than the rest — the bucket edges may
     not lose cross-boundary pairs (SURVEY.md §7.3.4)."""
-    t = _skewed_transcripts(spark)
-    mens = detect_mentions(spark, segment(t))
-    cols = ["conv_id", "e1_id", "e2_id", "e1_surface", "e2_surface",
-            "sent1", "tok1", "sent2", "tok2", "k"]
-    plain = candidate_pairs(mens).select(cols).toPandas().sort_values(cols).reset_index(drop=True)
-    salted = (
-        salted_candidate_pairs(mens, block=16)
-        .select(cols)
-        .toPandas()
-        .sort_values(cols)
-        .reset_index(drop=True)
-    )
-    assert len(plain) > 0
-    pd.testing.assert_frame_equal(plain, salted, check_dtype=False)
+    mens = detect_mentions(spark, segment(_skewed_transcripts(spark)))
+    ref = assert_candidates_match_reference(mens, MAX_K)
+    assert len(ref) > 0
+    assert (ref.conv_id == "conv-long").any()
 
 
-def test_salting_spreads_the_hot_conversation(spark):
-    """The salted join key (conv_id, salt) must split the long
-    conversation across multiple reducers: distinct salt count for the
-    hot conv ≈ ceil(n_sents / block)."""
-    t = _skewed_transcripts(spark)
-    mens = detect_mentions(spark, segment(t))
-    salts = (
+def test_band_join_spreads_the_hot_conversation(spark):
+    """The candidate join keys on (conv_id, bucket), and the long
+    conversation spans many of those keys, so no one reducer takes the
+    whole of it."""
+    mens = detect_mentions(spark, segment(_skewed_transcripts(spark)))
+    cands = candidate_pairs_fast(mens)
+    cands.write.format("noop").mode("overwrite").save()
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"(SortMergeJoin|HashJoin) \[[^\]]*bucket", plan), plan
+    keys = (
         mens.filter(F.col("conv_id") == "conv-long")
-        .withColumn("salt", (F.col("sent_idx") / 16).cast("int"))
-        .select("salt")
+        .selectExpr("conv_id", f"{_bucket(MAX_K)} AS bucket")
         .distinct()
         .count()
     )
-    assert salts >= 10  # 600 turns × 2 sents / 16 ≫ 10 blocks
+    assert keys >= 10  # 600 turns × 2 sents / (MAX_K + 1) ≫ 10 buckets
 
 
 def test_weights_load_from_package_resource():
