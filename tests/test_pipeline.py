@@ -87,6 +87,34 @@ def test_candidates_equal_reference(spark, sf_dir):
     assert len(assert_candidates_match_reference(mens, MAX_K)) > 0
 
 
+def test_salted_equals_unsalted_candidates(spark, sf_dir):
+    """The band join's bucket key is its skew salt: splitting a
+    conversation into (conv_id, bucket) join keys must lose no
+    cross-boundary pair against the unbucketed all-pairs reference.
+    max_k = 1 makes buckets 2 sentences wide, below typical
+    conversation length, to force real bucket splits."""
+    mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
+    ref = assert_candidates_match_reference(mens, 1)
+    assert (ref.sent1 // 2 != ref.sent2 // 2).any()
+
+
+def test_fast_candidates_equal_window_variant(spark, sf_dir):
+    """candidate_pairs (candidate_pairs_fast plus the W7 cand_seq
+    numbering window) must keep exactly the pairs candidate_pairs_fast
+    selects: the numbering adds a column, never drops or repeats a row."""
+    from cross_sentence_relation_extraction_idepnn_spark.operators.candidates import (
+        candidate_pairs_fast,
+    )
+
+    mens = detect_mentions(spark, segment(transcripts(spark, sf_dir)))
+    cols = ["conv_id", "e1_id", "e2_id", "e1_surface", "e2_surface",
+            "sent1", "tok1", "sent2", "tok2", "k"]
+    a = candidate_pairs(mens).select(cols).toPandas().sort_values(cols).reset_index(drop=True)
+    b = candidate_pairs_fast(mens).select(cols).toPandas().sort_values(cols).reset_index(drop=True)
+    assert len(a) > 0
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
 def _boundary_mentions(spark):
     """Mention rows around the band edges at max_k = 8 (buckets of 9
     sentences: 0-8, 9-17, 18-26), one scenario per conversation:
