@@ -83,9 +83,13 @@ def candidate_pairs_fast(mentions: DataFrame, max_k: int = MAX_K) -> DataFrame:
 
     - The OP⋈OBJ join is a band join on ``(conv_id, bucket)`` with
       ``bucket = sent_idx DIV (max_k + 1)`` (see the module notes).
-    - W5 nearest-pair selection runs as ``min_by`` aggregation (one
-      shuffle with map-side partial aggregation), not a ``row_number``
-      window (exchange + full sort).
+    - W5 nearest-pair selection runs as a ``min_by`` aggregation, not
+      a ``row_number`` window. Its struct ordering key keeps it off the
+      hash aggregates: the executed plan is a ``SortAggregate``, with a
+      full ``Sort`` of the in-band pairs under the partial aggregate
+      and a second ``Sort`` after the exchange when the input is not
+      already partitioned on the group key. The partial aggregate does
+      shrink what the exchange ships to one row per group.
     - ``cand_id`` is derived from the group key (``conv#e1#e2`` —
       unique after nearest-pair selection, and the key
       ``graph.duck_triples`` pins), so no numbering exchange is needed.

@@ -1075,11 +1075,12 @@ def dedup_clusters_delta(
     under their minimum member; ``is_canonical`` stays the keep-min-id
     rule (``cluster_id == doc_id``) on both halves.
 
-    Mechanics mirror ``canonicalize_incremental``: existing clusters
-    CONTRACT to ``'0:'+cluster`` encoded nodes, new documents ride as
-    ``'1:'+doc`` (zero-padded so string min == numeric min), and the
-    min-label components resolve the cluster-beats-new-doc priority
-    structurally — existing↔existing resolution work is never redone.
+    Mechanics are ``canonicalize_incremental``'s: the delta pairs go
+    through the same ``linking._label_stable_merge`` over zero-padded
+    doc-id strings (so string min == numeric min). New documents
+    cluster among themselves and each group adopts the minimum existing
+    cluster it touches — existing↔existing resolution work is never
+    redone.
     The pair derivation here reuses the full ``minhash_pairs`` scan
     split even/odd (one pass feeds both halves); a production
     deployment feeds the materialized cluster table and
@@ -1088,7 +1089,7 @@ def dedup_clusters_delta(
     from pyspark.storagelevel import StorageLevel
 
     from ..session import cache_scope, track_cache, track_checkpoint
-    from .linking import connected_components
+    from .linking import _label_stable_merge, connected_components
 
     def pad(c):
         return F.lpad(F.col(c).cast("string"), 15, "0")
@@ -1123,50 +1124,19 @@ def dedup_clusters_delta(
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # ---- delta resolution: >=1-odd pairs, even endpoints contracted
+        # ---- delta resolution: >=1-odd pairs, even endpoints seed labels
         dp = pairs.filter((F.col("doc_a") % 2 == 1) | (F.col("doc_b") % 2 == 1))
-        cl = canon.select(
-            F.col("doc_id").alias("_d"), F.col("cluster_id").alias("_c")
-        )
-        enc = dp.join(
-            cl.select(F.col("_d").alias("doc_a"), F.col("_c").alias("ca")),
-            "doc_a",
-            "left",
-        ).join(
-            cl.select(F.col("_d").alias("doc_b"), F.col("_c").alias("cb")),
-            "doc_b",
-            "left",
-        )
-
-        def node(side: str, cluster: str) -> F.Column:
-            return F.when(
-                F.col(cluster).isNotNull(),
-                F.concat(
-                    F.lit("0:"),
-                    F.lpad(F.col(cluster).cast("string"), 15, "0"),
-                ),
-            ).otherwise(F.concat(F.lit("1:"), pad(side)))
-
-        dedges = enc.select(
-            node("doc_a", "ca").alias("src"), node("doc_b", "cb").alias("dst")
-        ).filter(F.col("src") != F.col("dst"))
-        news = docs.filter(F.col("doc_id") % 2 == 1).select(
-            F.concat(F.lit("1:"), pad("doc_id")).alias("surface")
-        )
-        dnodes = (
-            news.union(dedges.select(F.col("src").alias("surface")))
-            .union(dedges.select(F.col("dst").alias("surface")))
-            .distinct()
-        )
-        resolved = (
-            connected_components(dnodes, dedges)
-            .filter(F.col("surface").startswith("1:"))
-            .select(
-                F.expr("substring(surface, 3)").cast("bigint").alias("doc_id"),
-                F.expr("substring(component, 3)").cast("bigint").alias(
-                    "cluster_id"
-                ),
-            )
+        resolved = _label_stable_merge(
+            canon.select(
+                pad("doc_id").alias("surface"), pad("cluster_id").alias("component")
+            ),
+            docs.filter(F.col("doc_id") % 2 == 1).select(
+                pad("doc_id").alias("surface")
+            ),
+            dp.select(pad("doc_a").alias("src"), pad("doc_b").alias("dst")),
+        ).select(
+            F.col("surface").cast("bigint").alias("doc_id"),
+            F.col("component").cast("bigint").alias("cluster_id"),
         )
         out_cols = [
             "doc_id",
@@ -1187,8 +1157,8 @@ def dedup_clusters_delta(
 def duck_dedup_clusters_delta(tau: float = MINHASH_TAU) -> str:
     """Oracle: even-half min-label clusters, then recursive min-label
     propagation over odd-odd edges with contracted ``'0:'+cluster``
-    seeds from odd-even edges — independent of the contracted
-    union-find under test."""
+    seeds from odd-even edges — independent of
+    ``linking._label_stable_merge`` under test."""
     ctes, final = _duck_minhash_pair_parts(tau)
     return f"""
         WITH RECURSIVE shingles AS ({duck_shingles_cte()})

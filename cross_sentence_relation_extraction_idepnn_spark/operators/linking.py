@@ -9,6 +9,14 @@ the mention/sentence join (``generate_bb_training_data_2016.py:313-477``),
 MUC6 ``PER_ALIAS`` expansion (``generate_muc6_data.py:51-53``), and the
 MUC6 ``list(set(...))`` dedup (``generate_muc6_data.py:125``).
 
+Similarity edges (character-bigram Jaccard ≥ tau) come from one of two
+builders: a driver loop up to ``PY_EDGE_MAX_NODES`` surfaces, the only
+size the KG build reaches, and above it one Spark ppjoin prefix join
+(:func:`similarity_edges`). Both round the Jaccard the same way and
+emit the same edge set. A broadcast nested-loop join used to stand
+between them up to 4,096 surfaces; it lost to the prefix join wherever
+it was selected (timings in :func:`similarity_edges`), so it is gone.
+
 Connected components: below a vocabulary-size threshold, one collect to
 a driver union-find; above it, the alternating LARGE-STAR / SMALL-STAR
 algorithm (Kiveris et al., "Connected Components in MapReduce and
@@ -21,6 +29,8 @@ SQL-expressible* despite being iterative.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,31 +74,32 @@ def _py_bigrams(s: str) -> set[str]:
     return {w[i : i + 2] for i in range(len(w) - 1)} if len(w) >= 2 else {w}
 
 
-def _py_similarity_edges(surfaces: list[str], tau: float) -> list[tuple[str, str]]:
-    """Driver-side twin of the ``similarity_edges`` NLJ path for tiny
-    vocabularies: same bigram sets, same HALF_UP round-to-6 of the
-    double ratio (``Decimal(repr(x))`` reproduces Spark's
-    ``BigDecimal.valueOf(double)`` shortest-decimal rounding), same
-    ``>= tau`` filter. O(n²) driver compute — callers gate it at
-    ``PY_EDGE_MAX_NODES``."""
-    from decimal import ROUND_HALF_UP, Decimal
+def _py_match(ba: set[str], bb: set[str], tau: float) -> bool:
+    """Driver twin of the Spark edge filter on two bigram sets: the
+    HALF_UP round-to-6 of the double ratio (``Decimal(repr(x))``
+    reproduces Spark's ``BigDecimal.valueOf(double)`` shortest-decimal
+    rounding), then ``>= tau``."""
+    inter = len(ba & bb)
+    if not inter:
+        return False
+    jac = Decimal(repr(inter / len(ba | bb))).quantize(
+        Decimal("0.000001"), rounding=ROUND_HALF_UP
+    )
+    return float(jac) >= tau
 
-    q = Decimal("0.000001")
+
+def _py_similarity_edges(surfaces: list[str], tau: float) -> list[tuple[str, str]]:
+    """Driver-side twin of :func:`similarity_edges` for tiny
+    vocabularies: (src, dst) pairs, src < dst. O(n²) driver compute —
+    callers gate it at ``PY_EDGE_MAX_NODES``."""
     ss = sorted(surfaces)
     bg = {s: _py_bigrams(s) for s in ss}
-    out = []
-    for i, a in enumerate(ss):
-        for b in ss[i + 1 :]:
-            inter = len(bg[a] & bg[b])
-            if not inter:
-                continue
-            union = len(bg[a] | bg[b])
-            jac = float(
-                Decimal(repr(inter / union)).quantize(q, rounding=ROUND_HALF_UP)
-            )
-            if jac >= tau:
-                out.append((a, b))
-    return out
+    return [
+        (a, b)
+        for i, a in enumerate(ss)
+        for b in ss[i + 1 :]
+        if _py_match(bg[a], bg[b], tau)
+    ]
 
 
 def _uf_components(
@@ -131,22 +142,13 @@ def _prefix_keys(nodes: DataFrame, tau: float) -> DataFrame:
     )
 
 
-NLJ_MAX_NODES = 4096
-
-
 def similarity_edges(
-    surfaces: DataFrame,
-    tau: float = JACCARD_TAU,
-    n_nodes: int | None = None,
-    nlj_threshold: int = NLJ_MAX_NODES,
+    surfaces: DataFrame, tau: float = JACCARD_TAU, news: DataFrame | None = None
 ) -> DataFrame:
-    """Distinct surfaces → undirected similarity edges (src < dst) with
-    character-bigram Jaccard ≥ tau.
+    """Distinct surfaces → undirected similarity edges (src < dst,
+    jaccard) with character-bigram Jaccard ≥ tau.
 
-    Hybrid plan. A small vocabulary (≤ ``nlj_threshold``) uses the
-    broadcast nested-loop compare — fewer stages beat candidate
-    generation on a dimension table (measured at sf0.1). Above it,
-    candidate generation is a *prefix-filtered* shared-bigram equi-join
+    Candidate generation is a *prefix-filtered* shared-bigram equi-join
     (the ppjoin prefix lemma): with every bigram set sorted by one
     global total order, any pair with Jaccard ≥ tau must share a bigram
     within each side's first ``n - ceil(tau·n) + 1`` bigrams — so
@@ -156,43 +158,43 @@ def similarity_edges(
     a boilerplate bigram shared by the whole vocabulary sorts LAST and
     never enters a prefix, so prefixes hold only rare bigrams and join
     buckets stay small. Exact Jaccard is verified on the candidates.
-    Both paths emit the identical edge set.
+
+    ``news`` (a ``surface`` column, a subset of ``surfaces``) keeps
+    only pairs with at least one endpoint in it: the incremental build
+    never pairs two existing surfaces, so its candidate set is
+    O(|news| · bucket) however large the accumulated vocabulary grows.
+    The document-frequency order is still taken over all of
+    ``surfaces``, so the prefix lemma holds for mixed pairs.
+
+    This join is the only Spark edge builder. A broadcast nested-loop
+    compare used to serve up to 4,096 surfaces; on a 4-core host it
+    took 3.29 s against this join's 1.16 s at 987 surfaces, and 11.9 s
+    against 1.78 s at 2,877. It won only below ~300 surfaces, where
+    :func:`canonicalize` uses the driver loop instead.
     """
     nodes = surfaces.select(F.col("surface")).distinct()
-    if n_nodes is None:
-        n_nodes = nodes.count()
-    if n_nodes <= nlj_threshold:
-        a = nodes.select(
-            F.col("surface").alias("src"), _bigrams(F.col("surface")).alias("bg1")
-        )
-        b = nodes.select(
-            F.col("surface").alias("dst"), _bigrams(F.col("surface")).alias("bg2")
-        )
-        pairs = a.join(F.broadcast(b), F.col("src") < F.col("dst"))
-        inter = F.size(F.array_intersect("bg1", "bg2"))
-        union = F.size(F.array_union("bg1", "bg2"))
-        return (
-            pairs.withColumn(
-                "jaccard", F.round(inter.cast("double") / union.cast("double"), 6)
-            )
-            .filter(F.col("jaccard") >= tau)
-            .select("src", "dst", "jaccard")
-        )
     keys = _prefix_keys(nodes, tau)
-    pairs = (
-        keys.select(F.col("surface").alias("src"), F.col("bg").alias("bg1"), "k")
-        .join(
-            keys.select(F.col("surface").alias("dst"), F.col("bg").alias("bg2"), "k"),
-            "k",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst", "bg1", "bg2")
-        .dropDuplicates(["src", "dst"])
+    left = keys if news is None else keys.join(news.select("surface"), "surface")
+    pairs = left.select(
+        F.col("surface").alias("s"), F.col("bg").alias("bg1"), "k"
+    ).join(
+        keys.select(F.col("surface").alias("t"), F.col("bg").alias("bg2"), "k"), "k"
     )
+    if news is None:
+        pairs = pairs.filter(F.col("s") < F.col("t"))
+    else:
+        pairs = pairs.filter(F.col("s") != F.col("t"))
     inter = F.size(F.array_intersect("bg1", "bg2"))
     union = F.size(F.array_union("bg1", "bg2"))
     return (
-        pairs.withColumn(
+        pairs.select(
+            F.least("s", "t").alias("src"),
+            F.greatest("s", "t").alias("dst"),
+            "bg1",
+            "bg2",
+        )
+        .dropDuplicates(["src", "dst"])
+        .withColumn(
             "jaccard", F.round(inter.cast("double") / union.cast("double"), 6)
         )
         .filter(F.col("jaccard") >= tau)
@@ -331,33 +333,31 @@ PY_EDGE_MAX_NODES = 512
 def canonicalize(mentions: DataFrame) -> DataFrame:
     """mention surfaces → (surface, component) canonical-cluster map.
 
-    Job-count discipline (the vocabulary is a DIMENSION table — tiny
-    relative to the corpus, so per-job driver overhead dominates the
-    actual compute): ONE capped collect (``limit(threshold+1)``) both
-    sizes the vocabulary and, when it fits the driver union-find,
-    delivers the surfaces — replacing the count + collect pair. Below
-    ``PY_EDGE_MAX_NODES`` surfaces the bigram-Jaccard edges are
-    computed driver-side too (exact twin of the NLJ path, pinned by
-    ``test_py_edge_twin_matches_spark_paths``), so the whole
-    canonical map costs a single Spark job. The in-core map comes back
-    as a JVM ``LocalRelation`` (``session.local_frame``), so the
-    broadcast that re-keys triples against it runs no Python worker
-    task. Larger vocabularies keep the Spark NLJ / ppjoin edge
-    builders and, above ``DRIVER_CC_MAX_NODES``, the distributed
-    large/small-star CC — the 100 TB path is unchanged."""
+    The vocabulary is a DIMENSION table, tiny next to the corpus, so
+    per-job driver overhead dominates the compute. ONE capped collect
+    (``limit(threshold+1)``) both sizes the vocabulary and, when it
+    fits the driver union-find, delivers the surfaces. Up to
+    ``PY_EDGE_MAX_NODES`` surfaces (the only tier the KG build
+    reaches) the edges come from the driver twin
+    ``_py_similarity_edges`` as well, so the whole map costs a single
+    Spark job. Above it the edges come from the Spark prefix join
+    (:func:`similarity_edges`) and one plain ``collect()``, still with
+    the local union-find; above
+    ``DRIVER_CC_MAX_NODES`` the distributed large/small-star CC takes
+    over. The in-core map comes back as a JVM ``LocalRelation``
+    (``session.local_frame``), so the broadcast that re-keys triples
+    against it runs no Python worker task."""
     nodes = mentions.select("surface").distinct()
     head = nodes.limit(DRIVER_CC_MAX_NODES + 1).collect()
     if len(head) > DRIVER_CC_MAX_NODES:
-        n = nodes.count()
-        edges = similarity_edges(nodes, n_nodes=n)
-        return connected_components(nodes, edges, n_nodes=n)
+        # len(head) already rules out the CC's driver tier
+        return connected_components(nodes, similarity_edges(nodes), n_nodes=len(head))
     surfaces = [r[0] for r in head]
-    n = len(surfaces)
-    if n <= PY_EDGE_MAX_NODES:
+    if len(surfaces) <= PY_EDGE_MAX_NODES:
         pairs = _py_similarity_edges(surfaces, JACCARD_TAU)
     else:
-        edges = similarity_edges(nodes, n_nodes=n)
-        pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
+        edges = similarity_edges(nodes).select("src", "dst").collect()
+        pairs = [(r[0], r[1]) for r in edges]
     return local_frame(
         mentions.sparkSession,
         _uf_components(surfaces, pairs),
@@ -369,93 +369,58 @@ def _py_incremental(
     ex_map: dict[str, str], news: list[str], tau: float
 ) -> list[tuple[str, str, int]]:
     """Driver-side twin of :func:`canonicalize_incremental` for tiny
-    vocabularies (same HALF_UP round-to-6 Jaccard as
-    ``_py_similarity_edges``): one Spark job for the whole merge."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal("0.000001")
-    bg = {s: _py_bigrams(s) for s in set(ex_map) | set(news)}
-
-    def _match(a: str, b: str) -> bool:
-        inter = len(bg[a] & bg[b])
-        if not inter:
-            return False
-        union = len(bg[a] | bg[b])
-        jac = float(Decimal(repr(inter / union)).quantize(q, rounding=ROUND_HALF_UP))
-        return jac >= tau
-
+    vocabularies (``_label_stable_merge`` over ``_py_match`` edges):
+    one Spark job for the whole merge."""
     ns = sorted(set(news))
-    enc_nodes = ["1:" + x for x in ns]
-    enc_edges: list[tuple[str, str]] = []
-    for i, x in enumerate(ns):
-        for y in ns[i + 1 :]:
-            if _match(x, y):
-                enc_edges.append(("1:" + x, "1:" + y))
-        for y, comp in ex_map.items():
-            if _match(x, y):
-                enc_edges.append(("1:" + x, "0:" + comp))
-    comps = sorted({c for _, c in enc_edges if c.startswith("0:")})
-    resolved = dict(_uf_components(enc_nodes + comps, enc_edges))
+    comp = dict(_uf_components(ns, _py_similarity_edges(ns, tau)))
+    bg = {s: _py_bigrams(s) for s in set(ex_map) | set(ns)}
+    seed: dict[str, str] = {}
+    for x in ns:
+        for y, c in ex_map.items():
+            if _py_match(bg[x], bg[y], tau):
+                seed[comp[x]] = min(seed.get(comp[x], c), c)
     out = [(s, c, 0) for s, c in sorted(ex_map.items())]
-    out += [(x, resolved["1:" + x][2:], 1) for x in ns]
+    out += [(x, seed.get(comp[x], comp[x]), 1) for x in ns]
     return out
 
 
-def _incremental_edges(
-    all_nodes: DataFrame,
-    news: DataFrame,
-    tau: float = JACCARD_TAU,
-    n_all: int | None = None,
-    nlj_threshold: int = NLJ_MAX_NODES,
+def _label_stable_merge(
+    existing: DataFrame, news: DataFrame, edges: DataFrame
 ) -> DataFrame:
-    """Similarity edges over ``all_nodes`` with AT LEAST ONE endpoint in
-    ``news`` — candidate generation never pairs two existing surfaces.
-    At 10^12-turn scale the accumulated vocabulary dominates the union
-    and existing↔existing pairs are exactly the O(V²) work incremental
-    maintenance exists to skip; this builder's candidate set is
-    O(|news| · bucket) instead. Same hybrid as
-    :func:`similarity_edges`: broadcast NLJ below ``nlj_threshold``
-    total nodes, lossless ppjoin prefix equi-join above it (the global
-    document-frequency order is computed over the UNION so the prefix
-    lemma holds for mixed pairs). Edges come back normalized
-    (src < dst), exact-Jaccard verified."""
-    if n_all is None:
-        n_all = all_nodes.count()
-    if n_all <= nlj_threshold:
-        a = news.select(
-            F.col("surface").alias("s"), _bigrams(F.col("surface")).alias("bg1")
-        )
-        b = all_nodes.select(
-            F.col("surface").alias("t"), _bigrams(F.col("surface")).alias("bg2")
-        )
-        pairs = a.join(F.broadcast(b), F.col("s") != F.col("t"))
-    else:
-        keys = _prefix_keys(all_nodes, tau)
-        kn = keys.join(news, "surface").select(
-            F.col("surface").alias("s"), F.col("bg").alias("bg1"), "k"
-        )
-        pairs = (
-            kn.join(
-                keys.select(
-                    F.col("surface").alias("t"), F.col("bg").alias("bg2"), "k"
-                ),
-                "k",
-            )
-            .filter(F.col("s") != F.col("t"))
-            .select("s", "t", "bg1", "bg2")
-            .dropDuplicates(["s", "t"])
-        )
-    inter = F.size(F.array_intersect("bg1", "bg2"))
-    union = F.size(F.array_union("bg1", "bg2"))
-    return (
-        pairs.withColumn(
-            "jaccard", F.round(inter.cast("double") / union.cast("double"), 6)
-        )
-        .filter(F.col("jaccard") >= tau)
+    """(surface, component) for each ``news(surface)`` row, merged into
+    the ``existing(surface, component)`` map without relabelling it.
+    ``edges(src, dst)`` between two existing surfaces are ignored.
+
+    New surfaces first cluster among themselves (new-new edges,
+    :func:`connected_components`). A cluster that touches an existing
+    surface adopts the smallest existing label it touches; otherwise it
+    keeps its min-surface label. A cluster that bridges two existing
+    clusters thus takes the smaller label and the clusters stay apart.
+    Existing clusters never relay a label from one new cluster to
+    another. Labels compare as strings, so numeric ids must come
+    zero-padded."""
+    exs = existing.select(F.col("surface").alias("_s"), F.col("component").alias("_c"))
+
+    def _end(side: str) -> DataFrame:
+        return exs.select(F.col("_s").alias(side), F.col("_c").alias(f"{side}_c"))
+
+    e = edges.join(_end("src"), "src", "left").join(_end("dst"), "dst", "left")
+    new_src, new_dst = F.col("src_c").isNull(), F.col("dst_c").isNull()
+    comp = connected_components(
+        news.select("surface"), e.filter(new_src & new_dst).select("src", "dst")
+    )
+    seeds = (
+        e.filter(new_src != new_dst)  # one new endpoint, one existing
         .select(
-            F.least("s", "t").alias("src"), F.greatest("s", "t").alias("dst")
+            F.when(new_src, F.col("src")).otherwise(F.col("dst")).alias("surface"),
+            F.coalesce("src_c", "dst_c").alias("seed"),
         )
-        .dropDuplicates(["src", "dst"])
+        .join(comp, "surface")
+        .groupBy("component")
+        .agg(F.min("seed").alias("seed"))
+    )
+    return comp.join(seeds, "component", "left").select(
+        "surface", F.coalesce("seed", "component").alias("component")
     )
 
 
@@ -464,7 +429,6 @@ def canonicalize_incremental(
     new_surfaces: DataFrame,
     tau: float = JACCARD_TAU,
     driver_threshold: int = PY_EDGE_MAX_NODES,
-    nlj_threshold: int = NLJ_MAX_NODES,
 ) -> DataFrame:
     """existing(surface, component) canonical map + a batch of new
     mention surfaces → (surface, component, is_new) extended map with
@@ -484,15 +448,14 @@ def canonicalize_incremental(
     (``streaming/triples.py:run_stream_kg``): each micro-batch can now
     extend the map instead of freezing it.
 
-    Mechanics: existing clusters are CONTRACTED to their label before
-    clustering — endpoints encode as ``'0:'+component`` (existing,
-    fixed) vs ``'1:'+surface`` (new), so the min-label union-find
-    resolves priority for free ('0:' sorts before '1:'). In-core
-    single-job fast path below ``driver_threshold`` total surfaces
-    (same discipline as :func:`canonicalize`); above it, the
-    new-endpoint-only edge builder plus the driver/star
-    :func:`connected_components` — existing↔existing pairs are never
-    generated at any scale."""
+    Up to ``driver_threshold`` total surfaces the merge runs in-core
+    as one Spark job (``_py_incremental``, the same discipline as
+    :func:`canonicalize`). Above it, :func:`similarity_edges` with
+    ``news`` builds only the edges that touch a new surface (existing
+    pairs are never generated at any scale), and
+    :func:`_label_stable_merge` resolves them. About 1,000 surfaces,
+    half existing, took 3.95–4.19 s this way against 4.6–5.1 s on the
+    broadcast nested-loop join it replaced (4-core host)."""
     spark = existing.sparkSession
     ex = existing.select("surface", "component")
     news = (
@@ -512,41 +475,8 @@ def canonicalize_incremental(
                 schema="surface string, component string, is_new int",
             )
     # ------------------------------------------------- distributed path
-    all_nodes = ex.select("surface").unionByName(news)
-    edges = _incremental_edges(all_nodes, news, tau, nlj_threshold=nlj_threshold)
-    exs = ex.select(F.col("surface").alias("_s"), F.col("component").alias("_c"))
-
-    def _enc(side: str) -> F.Column:
-        return F.when(
-            F.col(f"{side}_c").isNotNull(),
-            F.concat(F.lit("0:"), F.col(f"{side}_c")),
-        ).otherwise(F.concat(F.lit("1:"), F.col(side)))
-
-    e = (
-        edges.join(
-            exs.select(F.col("_s").alias("src"), F.col("_c").alias("src_c")),
-            "src",
-            "left",
-        )
-        .join(
-            exs.select(F.col("_s").alias("dst"), F.col("_c").alias("dst_c")),
-            "dst",
-            "left",
-        )
-        .select(_enc("src").alias("src"), _enc("dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    news_enc = news.select(F.concat(F.lit("1:"), F.col("surface")).alias("surface"))
-    nodes_enc = (
-        news_enc.unionByName(e.select(F.col("src").alias("surface")))
-        .unionByName(e.select(F.col("dst").alias("surface")))
-        .distinct()
-    )
-    comp = connected_components(nodes_enc, e)
-    resolved = comp.filter(F.col("surface").startswith("1:")).select(
-        F.expr("substr(surface, 3)").alias("surface"),
-        F.expr("substr(component, 3)").alias("component"),
-    )
+    edges = similarity_edges(ex.select("surface").unionByName(news), tau, news=news)
+    resolved = _label_stable_merge(ex, news, edges)
     return ex.select("surface", "component", F.lit(0).alias("is_new")).unionByName(
         resolved.select("surface", "component", F.lit(1).alias("is_new"))
     )
@@ -560,7 +490,7 @@ def duck_canonicalize_incremental_ctes(odd_pred: str, tau: float = JACCARD_TAU) 
     ``mentions_all``. Ends in ``inc_map(surface, component, is_new)``:
     min-label propagation restricted to new-new edges plus contracted
     ``'0:'+component`` seeds from new-existing edges — the independent
-    recursive-CTE formulation of the encoded union-find."""
+    recursive-CTE formulation of ``_label_stable_merge``."""
     return f"""
         , news AS (
             SELECT DISTINCT surface FROM mentions_all
@@ -710,6 +640,24 @@ def merge_kg_tables(*kgs: DataFrame) -> DataFrame:
     )
 
 
+def _incore_edges(
+    edges: DataFrame, incore_max_edges: int | None
+) -> list[tuple] | None:
+    """The hybrid fast path shared by the iterative KG analytics (the
+    ``connected_components`` pattern): a KG's edge set is
+    dimension-sized, so below the threshold (``incore_max_edges``,
+    default ``graph_incore.INCORE_MAX_EDGES``) one ``count()`` and one
+    ``collect()`` plus the bit-equal ``graph_incore`` twin beat per-round
+    Spark jobs of fixed launch overhead (pinned in
+    ``test_graph_incore.py``). Returns the two-column rows as tuples, or
+    None when the edges are over the threshold."""
+    if incore_max_edges is None:
+        incore_max_edges = graph_incore.INCORE_MAX_EDGES
+    if edges.count() > incore_max_edges:
+        return None
+    return [tuple(r) for r in edges.collect()]
+
+
 PAGERANK_SCALE = 1_000_000  # fixed-point micro-units
 PAGERANK_ITERS = 10
 
@@ -762,22 +710,9 @@ def kg_pagerank(
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # hybrid fast path (the connected_components pattern): the KG's
-        # edge set is dimension-sized — below the threshold, N Spark
-        # jobs of fixed launch overhead lose to ONE collect + the
-        # identical integer recurrence in-core (graph_incore.pagerank;
-        # bit-equal by construction, pinned in test_graph_incore.py)
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if edges.count() <= thr:
-            rows = graph_incore.pagerank(
-                [(r.src, r.dst) for r in edges.collect()],
-                iters,
-                PAGERANK_SCALE,
-            )
+        pairs = _incore_edges(edges, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.pagerank(pairs, iters, PAGERANK_SCALE)
             return local_frame(kg.sparkSession, rows, "node string, pr bigint")
         nodes = track_cache(
             edges.select(F.col("src").alias("node"))
@@ -1203,20 +1138,9 @@ def kg_communities(
         base = track_cache(
             kg.select("subj", "obj").persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # hybrid fast path (connected_components pattern): below the
-        # threshold the dimension-sized graph runs the identical
-        # synchronous LPA in-core (graph_incore.lpa) — one collect vs
-        # per-round Spark jobs; bit-equal, pinned in
-        # test_graph_incore.py
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if base.count() <= thr:
-            rows = graph_incore.lpa(
-                [(r.subj, r.obj) for r in base.collect()], iters
-            )
+        pairs = _incore_edges(base, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.lpa(pairs, iters)
             return local_frame(kg.sparkSession, rows, "node string, label string")
         directed = base.select(
             F.col("subj").alias("src"), F.col("obj").alias("dst")
@@ -1589,19 +1513,9 @@ def kg_paths(
         edges = track_cache(
             kg.select("subj", "obj").distinct().persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # hybrid fast path (connected_components pattern): below the
-        # threshold the BFS runs in-core (graph_incore.bfs_layers) —
-        # one collect vs 2 jobs/layer; bit-equal, pinned in
-        # test_graph_incore.py
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if edges.count() <= thr:
-            rows = graph_incore.bfs_layers(
-                [(r.subj, r.obj) for r in edges.collect()], max_hops
-            )
+        pairs = _incore_edges(edges, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.bfs_layers(pairs, max_hops)
             return local_frame(spark, rows, "node string, dist int")
         hub = (
             edges.groupBy("subj")
@@ -1721,19 +1635,9 @@ def kg_kcore(
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # hybrid fast path (connected_components pattern): below the
-        # threshold the peel runs in-core (graph_incore.kcore) — one
-        # collect of the symmetric distinct edge set vs 2 jobs/round;
-        # bit-equal, pinned in test_graph_incore.py
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if edges.count() <= thr:
-            rows = graph_incore.kcore(
-                [(r.src, r.dst) for r in edges.collect()], k, rounds
-            )
+        pairs = _incore_edges(edges, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.kcore(pairs, k, rounds)
             return local_frame(
                 kg.sparkSession,
                 rows,
@@ -1874,22 +1778,11 @@ def kg_walks(
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # hybrid fast path (connected_components pattern): below the
-        # threshold the hash-steered walks replay in-core
-        # (graph_incore.walks, same 60-bit md5 hash) — one collect vs
-        # 2 jobs/hop; bit-equal, pinned in test_graph_incore.py
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if dedges.count() <= thr:
-            rows = graph_incore.walks(
-                [(r.subj, r.obj) for r in dedges.collect()],
-                walks,
-                length,
-                max_nbrs,
-            )
+        # below the threshold the hash-steered walks replay in-core
+        # (graph_incore.walks, same 60-bit md5 hash)
+        pairs = _incore_edges(dedges, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.walks(pairs, walks, length, max_nbrs)
             return local_frame(
                 kg.sparkSession,
                 rows,
@@ -2462,18 +2355,9 @@ def kg_ppr(
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if edges.count() <= thr:
-            rows = graph_incore.ppr(
-                [(r.src, r.dst) for r in edges.collect()],
-                iters,
-                PAGERANK_SCALE,
-                n_seeds,
-            )
+        pairs = _incore_edges(edges, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.ppr(pairs, iters, PAGERANK_SCALE, n_seeds)
             return local_frame(kg.sparkSession, rows, "node string, ppr bigint")
         outdeg = track_cache(
             edges.groupBy("src").agg(F.count("*").alias("deg"))
@@ -2654,15 +2538,9 @@ def kg_ktruss(
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        thr = (
-            graph_incore.INCORE_MAX_EDGES
-            if incore_max_edges is None
-            else incore_max_edges
-        )
-        if und.count() <= thr:
-            rows = graph_incore.ktruss(
-                [(r.u, r.v) for r in und.collect()], k, rounds
-            )
+        pairs = _incore_edges(und, incore_max_edges)
+        if pairs is not None:
+            rows = graph_incore.ktruss(pairs, k, rounds)
             return local_frame(
                 kg.sparkSession,
                 rows,

@@ -21,6 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def _driver_mem_default() -> str:
+    """A third of physical memory for the driver heap, in GiB, at least
+    2g. A long-lived session's heap only grows, so a fixed 24g let one
+    process (the test suite, ``jobs/parity_self.py``) outgrow a 16 GB
+    host, where the kernel's OOM killer ended it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, total // (3 * 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "idepnn_spark",
     cores: int | None = None,
@@ -29,7 +38,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores=None`` uses ``$SPARK_GRAFT_CPUS`` (default 32). Shuffle
+    ``cores=None`` uses ``$SPARK_GRAFT_CPUS`` (default 32). The driver
+    heap is ``$SPARK_DRIVER_MEM``, by default a third of physical
+    memory (at least 2g). Shuffle
     partitions default to 2× cores locally; on a real cluster you would
     size them so post-shuffle partitions are ~128 MB (AQE coalesces).
     """
@@ -52,7 +63,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _driver_mem_default(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -149,7 +149,8 @@ def _brute_edges(surfaces: list[str], tau: float) -> set[tuple[str, str, float]]
 def test_similarity_edges_prefix_filter_is_lossless(spark):
     """The ppjoin prefix filter must produce EXACTLY the brute-force
     O(V²) edge set on a vocabulary with planted near-dups, typos, and
-    shared boilerplate tokens."""
+    shared boilerplate tokens — and with ``news``, exactly the brute
+    edges that touch a new surface."""
     rng = random.Random(7)
     base = ["scan", "table", "filter", "query", "join", "spark", "shuffle"]
     surfaces = []
@@ -158,27 +159,30 @@ def test_similarity_edges_prefix_filter_is_lossless(spark):
     surfaces += ["the " + w for w in base]  # hot 'th'/'he'/'e ' bigrams
     surfaces += ["".join(rng.choice("abcdefgh") for _ in range(6)) for _ in range(60)]
     df = spark.createDataFrame([(s,) for s in set(surfaces)], "surface string")
-    # nlj_threshold=0 forces the ppjoin path (default would take the
-    # small-vocabulary broadcast NLJ shortcut)
     got = {
-        (r.src, r.dst, r.jaccard)
-        for r in similarity_edges(df, tau=JACCARD_TAU, nlj_threshold=0).collect()
-    }
-    assert got == _brute_edges(surfaces, JACCARD_TAU)
-    assert len(got) > 10  # the fixture genuinely has near-dups
-    # and the NLJ shortcut emits the identical edge set
-    nlj = {
         (r.src, r.dst, r.jaccard)
         for r in similarity_edges(df, tau=JACCARD_TAU).collect()
     }
-    assert nlj == got
+    brute = _brute_edges(surfaces, JACCARD_TAU)
+    assert got == brute
+    assert len(got) > 10  # the fixture genuinely has near-dups
+    news = sorted(set(surfaces))[::3]
+    ndf = spark.createDataFrame([(s,) for s in news], "surface string")
+    got_new = {
+        (r.src, r.dst, r.jaccard)
+        for r in similarity_edges(df, tau=JACCARD_TAU, news=ndf).collect()
+    }
+    want_new = {e for e in brute if e[0] in news or e[1] in news}
+    assert got_new == want_new
+    assert want_new and want_new != brute
 
 
 def test_py_edge_twin_matches_spark_paths(spark):
     """The driver-side edge twin (``canonicalize``'s single-job fast
-    path) must emit EXACTLY the Spark NLJ and ppjoin edge sets —
-    including rounding behavior at the Jaccard boundary — and the fast
-    canonicalize must agree with union-find over the Spark edges."""
+    path) and the Spark prefix join must both emit EXACTLY the
+    brute-force edge set — including rounding behavior at the Jaccard
+    boundary — and the fast canonicalize must agree with union-find
+    over the brute-force edges."""
     rng = random.Random(11)
     base = ["alpha", "beta", "gamma", "delta", "epsilon"]
     surfaces = set()
@@ -193,25 +197,76 @@ def test_py_edge_twin_matches_spark_paths(spark):
     }
     surfaces = sorted(surfaces)
     df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    brute = {(a, b) for a, b, _ in _brute_edges(surfaces, JACCARD_TAU)}
     py = set(_py_similarity_edges(surfaces, JACCARD_TAU))
-    nlj = {
+    ppj = {
         (r.src, r.dst) for r in similarity_edges(df, tau=JACCARD_TAU).collect()
     }
-    ppj = {
-        (r.src, r.dst)
-        for r in similarity_edges(df, tau=JACCARD_TAU, nlj_threshold=0).collect()
-    }
-    assert py == nlj == ppj
+    assert py == ppj == brute
     assert len(py) > 10
     # canonicalize (py fast path: vocabulary ≤ PY_EDGE_MAX_NODES) vs
-    # the general driver union-find over the Spark-computed edges
-    edf = spark.createDataFrame(sorted(nlj), "src string, dst string")
-    want = {
-        (r.surface, r.component)
-        for r in connected_components(df, edf, n_nodes=len(surfaces)).collect()
-    }
-    got = {(r.surface, r.component) for r in canonicalize(df).collect()}
+    # union-find over the brute-force edges
+    want = _uf_components(surfaces, sorted(brute))
+    got = {r.surface: r.component for r in canonicalize(df).collect()}
     assert got == want
+
+
+def _near_dup_vocab(seed: int, n_base: int) -> list[str]:
+    """Random 3-8-letter words, each with near-duplicate variants (a
+    plural, a prefix, a one-letter typo), so the bigram-Jaccard graph
+    has edges and multi-surface components."""
+    rng = random.Random(seed)
+    out = set()
+    for _ in range(n_base):
+        w = "".join(rng.choice("abcdefghijkl") for _ in range(rng.randint(3, 8)))
+        out |= {w, w + "s", "re" + w, w[:-1] + rng.choice("mnop")}
+    return sorted(out)
+
+
+def test_spark_edge_tier_matches_oracle(spark):
+    """Above ``PY_EDGE_MAX_NODES`` surfaces ``canonicalize`` and
+    ``canonicalize_incremental`` build their edges with the Spark
+    prefix join, a tier the parity queries never reach: both must equal
+    their DuckDB oracles (``duck_canonicalize_ctes``,
+    ``duck_canonicalize_incremental_ctes``) frame-exactly."""
+    import duckdb
+    import pandas as pd
+
+    from compare_util import assert_frames_match
+    from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
+        PY_EDGE_MAX_NODES,
+        canonicalize_incremental,
+        duck_canonicalize_ctes,
+        duck_canonicalize_incremental_ctes,
+    )
+
+    surfaces = _near_dup_vocab(17, 300)
+    assert len(surfaces) > 2 * PY_EDGE_MAX_NODES
+    pdf = pd.DataFrame(
+        {"surface": surfaces, "half": [i % 2 for i in range(len(surfaces))]}
+    )
+    con = duckdb.connect()
+    con.register("m_all", pdf)
+    m = spark.createDataFrame(pdf)
+
+    assert_frames_match(
+        canonicalize(m.select("surface")),
+        con,
+        "WITH RECURSIVE mentions AS (SELECT surface FROM m_all)"
+        + duck_canonicalize_ctes()
+        + " SELECT surface, component FROM canon",
+    )
+    old = canonicalize(m.filter("half = 0").select("surface"))
+    assert old.count() > PY_EDGE_MAX_NODES
+    assert_frames_match(
+        canonicalize_incremental(old, m.filter("half = 1").select("surface")),
+        con,
+        "WITH RECURSIVE mentions_all AS (SELECT surface, half FROM m_all), "
+        "mentions AS (SELECT surface FROM mentions_all WHERE half = 0)"
+        + duck_canonicalize_ctes()
+        + duck_canonicalize_incremental_ctes("half = 1")
+        + " SELECT surface, component, is_new FROM inc_map",
+    )
 
 
 def test_prefix_keys_exclude_hot_bigram(spark):
@@ -664,8 +719,11 @@ def test_canonicalize_incremental_stability_and_paths(spark):
     merge the clusters and re-key the triple log; (b) adoption
     propagates through chains of new surfaces; (c) new-only clusters
     found under their min surface; (d) already-known surfaces pass
-    through without an is_new row; (e) the in-core fast path and the
-    distributed NLJ / ppjoin paths emit identical maps."""
+    through without an is_new row; (e) an existing cluster never relays
+    a label between new clusters: ``efghi`` touches only ``efgh`` and
+    keeps it, although ``defg`` bridges ``efgh`` to the smaller
+    ``cdef``; (f) the in-core fast path and the distributed prefix-join
+    path both emit the expected map."""
     from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
         canonicalize_incremental,
     )
@@ -675,6 +733,7 @@ def test_canonicalize_incremental_stability_and_paths(spark):
             ("alpha", "alpha"), ("alphas", "alpha"),   # cluster A
             ("abcd", "abcd"), ("cdef", "cdef"),        # bridgeable pair
             ("mnop", "mnop"),                          # chain target
+            ("efgh", "efgh"),                          # relay probe
         ],
         "surface string, component string",
     )
@@ -687,6 +746,8 @@ def test_canonicalize_incremental_stability_and_paths(spark):
             ("xyxy",), ("yxyx",),  # new-only twin cluster
             ("qq",),      # isolated singleton
             ("alpha",),   # already known: pass-through, no is_new row
+            ("efghi",),   # J("efgh","efghi")=3/4, J to defg=2/5
+            ("defg",),    # J=2/4 to both cdef and efgh -> cdef
         ],
         "surface string",
     )
@@ -696,24 +757,19 @@ def test_canonicalize_incremental_stability_and_paths(spark):
         ("alphaz", "alpha", 1), ("bcde", "abcd", 1),
         ("nopq", "mnop", 1), ("opqr", "mnop", 1),
         ("xyxy", "xyxy", 1), ("yxyx", "xyxy", 1), ("qq", "qq", 1),
+        ("efgh", "efgh", 0), ("efghi", "efgh", 1), ("defg", "cdef", 1),
     }
     incore = {
         tuple(r) for r in canonicalize_incremental(existing, news).collect()
     }
     assert incore == want
-    nlj = {
+    distributed = {
         tuple(r)
         for r in canonicalize_incremental(
             existing, news, driver_threshold=0
         ).collect()
     }
-    ppj = {
-        tuple(r)
-        for r in canonicalize_incremental(
-            existing, news, driver_threshold=0, nlj_threshold=0
-        ).collect()
-    }
-    assert incore == nlj == ppj
+    assert distributed == want
     # contrast: a full REBUILD over the union merges the bridged
     # clusters — cdef loses its label (the re-keying incremental
     # maintenance must avoid)
