@@ -33,9 +33,12 @@ Reference semantics re-expressed:
   indices until the ends meet (``bfs_path`` stays as the test
   reference).
 - G5 ADP (``recursive_net_utils/data_utils.py:13-149``): a dummy root
-  joins sentence roots (``combine_parents_list``); the TreeRNN consumes
-  a topologically-ordered flattened (x, tree, out_idx) schedule
-  (``tree_rnn.py:71-106``).
+  joins sentence roots (``combine_parents_list``), and the reference
+  TreeRNN walks the window's forest leaves-first (``tree_rnn.py:71-106``).
+  The dummy root's state is never read, so every real node's state
+  depends only on its own sentence: the kernel evaluates each distinct
+  sentence of a batch once, level by level, and gathers each row's SDP
+  states from those.
 - M1–M7 (``rnn/elman_bidirection_RC.py``): embedding gather + feature
   concat, forward/backward Elman recurrences, bi-combiner
   ``tanh(h_f + h_b + h_bi W)``, softmax head. The reference scores one
@@ -54,6 +57,7 @@ from __future__ import annotations
 
 import hashlib
 from functools import lru_cache
+from itertools import chain
 
 import numpy as np
 
@@ -277,80 +281,6 @@ def combined_parents(sent_words: list[list[str]]) -> list[int]:
     return parents  # dummy root = index `total` (implicit, no row)
 
 
-def tree_schedule(parents: list[int]) -> list[int]:
-    """Topological (leaves-first) evaluation order over real nodes +
-    dummy root, mirroring tree_rnn.gen_nn_inputs' bottom-up schedule."""
-    n = len(parents)
-    children: list[list[int]] = [[] for _ in range(n + 1)]
-    for i, p in enumerate(parents):
-        children[p].append(i)
-    order: list[int] = []
-    state = [0] * (n + 1)
-
-    def visit(u: int) -> None:
-        stack = [(u, False)]
-        while stack:
-            node, done = stack.pop()
-            if done:
-                order.append(node)
-                continue
-            stack.append((node, True))
-            for c in children[node]:
-                stack.append((c, False))
-
-    visit(n)
-    return order  # post-order: children before parents, dummy root last
-
-
-@lru_cache(maxsize=_SENT_MEMO)
-def _sentence_postorder(words: tuple[str, ...]) -> tuple[int, ...]:
-    """Per-sentence DFS post-order (local indices), memoized like
-    ``heads_of``. Node-for-node identical to the order
-    :func:`tree_schedule` emits for that sentence's subtree: the
-    window-level DFS visits each sentence root's subtree
-    independently (roots are the dummy root's children), pushing
-    children onto the stack in ascending order — which is exactly
-    what this per-sentence visit does."""
-    children: list[list[int]] = [[] for _ in words]
-    for i, h in enumerate(heads_of(words)):
-        if h >= 0:
-            children[h].append(i)
-    order: list[int] = []
-    stack = [(0, False)]  # token 0 is the sentence root
-    while stack:
-        node, done = stack.pop()
-        if done:
-            order.append(node)
-            continue
-        stack.append((node, True))
-        for c in children[node]:
-            stack.append((c, False))
-    return tuple(order)
-
-
-def window_schedule(sent_words: list[list[str]]) -> list[int]:
-    """:func:`tree_schedule` over :func:`combined_parents`, decomposed
-    into memoized per-sentence post-orders (r6, guide §1.2 step 2:
-    the DFS was re-run for every distinct WINDOW, but windows overlap
-    heavily and the order is sentence-separable). The window-level
-    stack pops the dummy root's children (= sentence roots, pushed
-    ascending) in REVERSE, so the full order is the reversed
-    concatenation of shifted per-sentence post-orders + dummy root —
-    list-for-list identical to ``tree_schedule(combined_parents(...))``
-    (pinned by ``test_window_schedule_matches_tree_schedule``)."""
-    total = sum(len(w) for w in sent_words)
-    offsets: list[int] = []
-    o = 0
-    for words in sent_words:
-        offsets.append(o)
-        o += len(words)
-    order: list[int] = []
-    for words, off in zip(reversed(sent_words), reversed(offsets)):
-        order.extend(off + u for u in _sentence_postorder(tuple(words)))
-    order.append(total)  # dummy root last
-    return order
-
-
 # ----------------------------------------------------- W6: context windows
 
 def context_windows(idxs: list[int], win: int) -> list[list[int]]:
@@ -539,35 +469,19 @@ def weights_from_lists(d: dict[str, list]) -> dict[str, np.ndarray]:
 
 # ------------------------------------------------------- featurize (per row)
 
-def _tree_levels(parents, order) -> list[int]:
-    """Per-node height above the leaves (the TreeRNN wave index),
-    derived along a leaves-first ``order``; the dummy root is left
-    out."""
-    n = len(parents)
-    l = [0] * (n + 1)
-    for u in order:
-        if u < n:
-            pu = parents[u]
-            if pu < n and l[u] + 1 > l[pu]:
-                l[pu] = l[u] + 1
-    return l[:n]
-
-
 @lru_cache(maxsize=_WINDOW_MEMO)
 def _window_structures(key: tuple[str, ...], tokenize):
     """Window-level memo: many candidates share the same sentence
     window (every pair inside a conversation span), so everything that
     depends only on the window — tokenization, offsets, the SDP tree
-    (G1/G2), the ADP parent array, its topological schedule and the
-    TreeRNN arrays (G5) — computes once per DISTINCT window per
-    executor. Only the per-candidate tree walk and index arrays remain
-    in the row loop.
+    (G1/G2) and the ADP parent array (G5) — computes once per DISTINCT
+    window per executor. Only the per-candidate tree walk and index
+    arrays remain in the row loop.
 
-    Returns (offsets, all_words, up, parents, order, tree_arrays), or
-    None for an empty-tokenizing window (F5). ``up`` is the SDP tree's
-    parent: the in-sentence head, or the previous sentence's root for a
-    sentence root (-1 for the first). ``tree_arrays`` is (parents as
-    int64, per-node levels)."""
+    Returns (offsets, all_words, up, parents), or None for an
+    empty-tokenizing window (F5). ``up`` is the SDP tree's parent: the
+    in-sentence head, or the previous sentence's root for a sentence
+    root (-1 for the first)."""
     split = tokenize or (lambda s: s.split(" "))
     sent_words = [tuple(split(s)) if s and s.strip() else () for s in key]
     if not all(sent_words):
@@ -580,13 +494,7 @@ def _window_structures(key: tuple[str, ...], tokenize):
         up.extend(off + h for h in heads_of(words)[1:])
         offsets.append(off + len(words))
     all_words = [w for ws in sent_words for w in ws]
-    parents = combined_parents(sent_words)
-    order = window_schedule(sent_words)  # == tree_schedule(parents), memoized
-    tree_arrays = (
-        np.asarray(parents, dtype=np.int64),
-        np.asarray(_tree_levels(parents, order), dtype=np.int64),
-    )
-    return offsets, all_words, up, parents, order, tree_arrays
+    return offsets, all_words, up, combined_parents(sent_words)
 
 
 def featurize_window(
@@ -608,13 +516,12 @@ def featurize_window(
 
     Returns None when an entity index lies outside the window
     (quarantine route, F3) or the window tokenizes empty (F5). Every
-    window graph is connected, so an SDP always exists. The row also
-    carries the window's ``tree_arrays`` for :func:`tree_mean_states`.
+    window graph is connected, so an SDP always exists.
     """
     win = _window_structures(tuple(sent_texts), tokenize)
     if win is None:
         return None
-    offsets, all_words, up, parents, order, tree_arrays = win
+    offsets, all_words, up, parents = win
     g1 = int(offsets[sent1 - smin] + tok1)
     g2 = int(offsets[sent2 - smin] + tok2)
     n = len(all_words)
@@ -650,8 +557,6 @@ def featurize_window(
         "pi_e2": pi2,
         "win_words": all_words,
         "parents": parents,
-        "tree_order": order,
-        "tree_arrays": tree_arrays,
     }
 
 
@@ -796,85 +701,102 @@ def feature_batch(
     return h_bi
 
 
+def _row_matmul(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` whose every row is the same whatever ``a``'s row count:
+    numpy hands a one-row product to BLAS gemv, which rounds unlike the
+    gemm that serves two rows or more."""
+    if len(a) == 1:
+        return (np.concatenate([a, a]) @ b)[:1]
+    return a @ b
+
+
 def tree_mean_states(rows: list[dict], W: dict[str, np.ndarray]) -> np.ndarray:
     """(B, HIDDEN) mean TreeRNN hidden state over each row's SDP tokens
     (the pre-projection half of M6 — projection by ``W_tree_proj`` is
-    linear, so training can reuse these as fixed inputs).
+    linear, so training can reuse these as fixed inputs). Reads only
+    ``win_words``, ``parents`` and ``sdp_gidx`` of each row.
 
-    Level-synchronous batched evaluation: all trees in the batch are
-    flattened to one global node array; nodes at the same depth-from-
-    leaves evaluate as ONE matmul wave, child states scatter-add into
-    parents. Python touches each node only for id/level bookkeeping —
-    the tanh/matmul work is whole-batch numpy (this was the last
-    per-row recursion in the scoring kernel)."""
+    The dummy root's state is discarded, so a node's state depends only
+    on its own sentence: the batch evaluates each DISTINCT sentence
+    once. A sentence starts at a root (``parents[i] == len(parents)``)
+    and is keyed by its words and local parent offsets. Level-
+    synchronous evaluation: nodes at the same height above the leaves
+    evaluate as ONE matmul wave and their states scatter-add into their
+    parents. Each row gathers its SDP states through its window's node
+    map. Per 2,048-row batch this is 1,947 node evaluations against
+    8,523 over distinct windows on kg_dense; kg_longconv's windows are
+    nearly all one sentence (3,032 against 3,036)."""
     B = len(rows)
-    out = np.zeros((B, HIDDEN))
     if B == 0:
-        return out
-    # Distinct-window dedup (r6, guide §1.2 step 2): node hidden states
-    # depend ONLY on the window (win_words + parents), never on the
-    # candidate, and the fused path hands every same-window candidate
-    # the SAME memoized list objects (``_window_structures``), so
-    # object identity finds the duplicates for free. Node states
-    # evaluate once per DISTINCT window (measured ~53% distinct at
-    # sf0.1); only the per-candidate SDP segment mean stays row-grain.
-    # Rows from the staged/Arrow path carry fresh lists → every id is
-    # distinct → identical behavior, no dedup. Trees are disjoint
-    # blocks of the global node array, so per-window computations are
-    # value-identical to the all-rows form.
-    win_of: dict[int, int] = {}
-    row_win = np.empty(B, dtype=np.int64)
-    uniq: list[dict] = []
+        return np.zeros((0, HIDDEN))
+    # fused rows of one window share memoized list objects
+    # (``_window_structures``), so object identity skips the sentence
+    # split for repeated windows; staged rows carry fresh lists
+    win_at: dict[int, int] = {}  # id(win_words) → offset into node_of
+    node_of: list[int] = []  # window node → sentence node id
+    row_at = np.empty(B, dtype=np.int64)
+    sent_at: dict[tuple, int] = {}  # (words, local parents) → first node id
+    words: list[str] = []
+    par: list[int] = []  # parent node id; -1 for a sentence root
+    lvl: list[int] = []  # height above the leaves
     for b, r in enumerate(rows):
-        key = id(r["win_words"])
-        u = win_of.get(key)
-        if u is None:
-            u = len(uniq)
-            win_of[key] = u
-            uniq.append(r)
-        row_win[b] = u
-    offs = np.cumsum([0] + [len(r["win_words"]) for r in uniq])
-    N = int(offs[-1])
+        ww = r["win_words"]
+        at = win_at.get(id(ww))
+        if at is None:
+            at = win_at[id(ww)] = len(node_of)
+            p = r["parents"]
+            n = len(p)
+            starts = [i for i, q in enumerate(p) if q == n]
+            if starts[:1] != [0]:
+                raise ValueError("a window must start with a sentence root")
+            for s, e in zip(starts, starts[1:] + [n]):
+                key = (tuple(ww[s:e]), tuple([q - s for q in p[s + 1 : e]]))
+                base = sent_at.get(key)
+                if base is None:
+                    base = sent_at[key] = len(words)
+                    sw, loc = key
+                    lv = [0] * len(sw)
+                    # heads point left, so a reverse scan settles each
+                    # node's height before it reaches the node
+                    for i in range(len(loc), 0, -1):
+                        q = loc[i - 1]
+                        if not 0 <= q < i:
+                            raise ValueError("heads must point left within a sentence")
+                        if lv[i] >= lv[q]:
+                            lv[q] = lv[i] + 1
+                    words.extend(sw)
+                    par.append(-1)
+                    par.extend(base + q for q in loc)
+                    lvl.extend(lv)
+                node_of.extend(range(base, base + e - s))
+        row_at[b] = at
+    N = len(words)
     vocab: dict[str, int] = {}
     setdefault = vocab.setdefault
-    wid = np.empty(N, dtype=np.int64)
-    par = np.empty(N, dtype=np.int64)  # global parent id; dummy → sink N
-    lvl = np.empty(N, dtype=np.int64)
-    for b, r in enumerate(uniq):
-        o = int(offs[b])
-        n = int(offs[b + 1]) - o
-        wid[o : o + n] = [setdefault(w.lower(), len(vocab)) for w in r["win_words"]]
-        # featurize_window rows carry the window's memoized arrays;
-        # staged rows arrive from Arrow without them
-        arrays = r.get("tree_arrays")
-        if arrays is None:
-            p = r["parents"]
-            arrays = (np.asarray(p, dtype=np.int64), _tree_levels(p, r["tree_order"]))
-        parr, larr = arrays
-        par[o : o + n] = np.where(parr >= n, N, o + parr)
-        lvl[o : o + n] = larr
+    wid = np.array([setdefault(w.lower(), len(vocab)) for w in words], dtype=np.int64)
     emb = np.empty((len(vocab), EMB_DIM))
     for w, i in vocab.items():
         emb[i] = word_vec(w)
-    xw = emb[wid] @ W["W_hx_t"] + W["b_t"]  # (N, H) leaf inputs
+    xw = _row_matmul(emb[wid], W["W_hx_t"]) + W["b_t"]  # (N, H) leaf inputs
+    par_a = np.array(par, dtype=np.int64)
+    par_a[par_a < 0] = N  # sentence roots feed the dummy-root sink
+    lvl_a = np.array(lvl, dtype=np.int64)
     h = np.empty((N, HIDDEN))
     acc = np.zeros((N + 1, HIDDEN))  # +1 = dummy-root sink (discarded)
-    for d in range(int(lvl.max()) + 1):
-        idx = np.nonzero(lvl == d)[0]
-        hi = np.tanh(xw[idx] + acc[idx] @ W["W_hh_t"])
+    for d in range(int(lvl_a.max()) + 1):
+        idx = np.nonzero(lvl_a == d)[0]
+        hi = np.tanh(xw[idx] + _row_matmul(acc[idx], W["W_hh_t"]))
         h[idx] = hi
-        pidx = par[idx]
+        pidx = par_a[idx]
         for j in range(HIDDEN):  # scatter-add via C-speed bincount
             acc[:, j] += np.bincount(pidx, weights=hi[:, j], minlength=N + 1)
     # segment means over each row's SDP token states (row grain: the
     # SDP indices are candidate-specific even when the window repeats)
-    g_all = np.concatenate(
-        [
-            np.asarray(r["sdp_gidx"], dtype=np.int64) + int(offs[row_win[b]])
-            for b, r in enumerate(rows)
-        ]
-    )
     counts = np.array([len(r["sdp_gidx"]) for r in rows])
+    sdp = np.fromiter(
+        chain.from_iterable(r["sdp_gidx"] for r in rows), np.int64, int(counts.sum())
+    )
+    g_all = np.array(node_of, dtype=np.int64)[sdp + np.repeat(row_at, counts)]
     bounds = np.zeros(B, dtype=np.int64)
     np.cumsum(counts[:-1], out=bounds[1:])
     sums = np.add.reduceat(h[g_all], bounds, axis=0)
@@ -964,28 +886,3 @@ def second_ranked(probs: np.ndarray) -> np.ndarray:
     if probs.shape[0] == 0:
         return np.zeros((0,), dtype=np.int32)
     return np.argsort(probs, axis=1)[:, -2].astype(np.int32)
-
-
-def _tree_state(r: dict, W: dict[str, np.ndarray]) -> np.ndarray:
-    """TreeRNN over the window dependency tree (M6): leaves-first
-    ``h = tanh(b + W_hx x + W_hh Σ child_h)``; the ADP feature is the
-    mean of SDP-token hidden states projected to FEAT_DIM (subtree
-    embedding per SDP token, elman_bidirection_RC.py:454-474)."""
-    return _tree_hidden_mean(r, W) @ W["W_tree_proj"]
-
-
-def _tree_hidden_mean(r: dict, W: dict[str, np.ndarray]) -> np.ndarray:
-    words = r["win_words"]
-    parents = r["parents"]
-    order = r["tree_order"]
-    n = len(words)
-    h = np.zeros((n + 1, HIDDEN))
-    acc = np.zeros((n + 1, HIDDEN))
-    for u in order:
-        x = word_vec(words[u]) if u < n else np.zeros(EMB_DIM)
-        h[u] = np.tanh(W["b_t"] + x @ W["W_hx_t"] + acc[u] @ W["W_hh_t"])
-        p = parents[u] if u < n else None
-        if p is not None:
-            acc[p] += h[u]
-    sdp_states = h[np.asarray(r["sdp_gidx"], dtype=int)]
-    return sdp_states.mean(axis=0)

@@ -4,8 +4,9 @@
 candidate window into inter-sentential dependency-path features:
 deterministic parse (G1), global graph with root chaining (G2), exact
 entity-index resolution (G3), the tree path between the two entity
-tokens = iSDP (G4), flattened ADP tree schedule (G5), position/POS/IOB
-index arrays (M11–M13).
+tokens = iSDP (G4), the window's ADP parent array (G5; the TreeRNN
+derives its evaluation levels from it), position/POS/IOB index arrays
+(M11–M13).
 
 The reference re-parses every candidate through a JVM subprocess
 (``generate_sdp.py:24-28,70-79``) — the dominant hot spot (SURVEY.md
@@ -46,7 +47,7 @@ CAND_COLS = [
 FEAT_FIELDS = (
     "sdp_gidx array<int>, sdp_words array<string>, sdp_pos array<int>, "
     "sdp_iob array<int>, pi_e1 array<int>, pi_e2 array<int>, "
-    "win_words array<string>, parents array<int>, tree_order array<int>, "
+    "win_words array<string>, parents array<int>, "
     # M12 — explicit entity-presence bit pairs (word-set membership,
     # elman-bidirection.py:186-189); the model consumes the IOB channel,
     # these stay observable columns for reference parity
@@ -164,7 +165,6 @@ def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
             "pi_e2": None,
             "win_words": None,
             "parents": None,
-            "tree_order": None,
             "ent_pres_e1": None,
             "ent_pres_e2": None,
         }
@@ -189,8 +189,6 @@ def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
                     feats.append(
                         {"ok": True, **f, "ent_pres_e1": f1, "ent_pres_e2": f2}
                     )
-            # only the declared feature columns: the kernel's row also
-            # carries its window's in-memory tree arrays
             feat_df = pd.DataFrame(feats, columns=["ok", *empty])
             out = pd.concat([pdf.reset_index(drop=True), feat_df], axis=1)
             yield out

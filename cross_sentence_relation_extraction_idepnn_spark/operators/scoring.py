@@ -32,7 +32,6 @@ FEATURE_COLS = [
     "pi_e2",
     "win_words",
     "parents",
-    "tree_order",
 ]
 
 PASSTHROUGH_COLS = [

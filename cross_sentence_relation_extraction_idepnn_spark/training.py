@@ -395,6 +395,7 @@ def _collect_training_set(sf_dir: str):
     from .operators.candidates import candidate_pairs
     from .operators.graph import candidate_windows, featurize_pair
     from .operators.mentions import detect_mentions
+    from .operators.scoring import FEATURE_COLS
     from .operators.segmentation import segment
     from .session import get_spark
     from .sources.transcripts import transcripts
@@ -403,18 +404,7 @@ def _collect_training_set(sf_dir: str):
     sents = segment(transcripts(spark, sf_dir))
     cands = candidate_pairs(detect_mentions(spark, sents))
     feats = featurize_pair(candidate_windows(cands, sents)).filter("ok")
-    pdf = feats.select(
-        "k",
-        "sdp_gidx",
-        "sdp_words",
-        "sdp_pos",
-        "sdp_iob",
-        "pi_e1",
-        "pi_e2",
-        "win_words",
-        "parents",
-        "tree_order",
-    ).toPandas()
+    pdf = feats.select("k", *FEATURE_COLS).toPandas()
     rows = pdf.to_dict("records")
     ks = np.array([int(r.pop("k")) for r in rows])
     return rows, ks
@@ -435,6 +425,7 @@ def _collect_boundary_set(
     from .operators.candidates import candidate_pairs_fast
     from .operators.graph import candidate_windows, featurize_pair
     from .operators.mentions import detect_mentions
+    from .operators.scoring import FEATURE_COLS
     from .operators.segmentation import segment
     from .session import get_spark
     from .sources.transcripts import transcripts
@@ -448,10 +439,7 @@ def _collect_boundary_set(
     picked = feats.filter(
         dist.isin(list(dists)) & (F.pmod(F.xxhash64("cand_id"), keep_every) == 0)
     )
-    pdf = picked.select(
-        "k", "sdp_gidx", "sdp_words", "sdp_pos", "sdp_iob",
-        "pi_e1", "pi_e2", "win_words", "parents", "tree_order",
-    ).toPandas()
+    pdf = picked.select("k", *FEATURE_COLS).toPandas()
     rows = pdf.to_dict("records")
     for r in rows:
         r.pop("k")

@@ -97,17 +97,6 @@ def test_combined_parents_dummy_root():
     assert 0 <= parents[1] < 2  # in-sentence head, global index
 
 
-def test_tree_schedule_is_topological():
-    parents = K.combined_parents([["a", "b", "c"], ["d", "e"]])
-    order = K.tree_schedule(parents)
-    n = len(parents)
-    assert sorted(order) == list(range(n + 1))
-    pos = {u: i for i, u in enumerate(order)}
-    for child, par in enumerate(parents):
-        assert pos[child] < pos[par], "children must be evaluated first"
-    assert order[-1] == n  # dummy root last
-
-
 # ------------------------------------------------------------- featurize
 
 def test_featurize_window_basic():
@@ -213,29 +202,68 @@ def test_forward_pass_matches_loop_oracle_no_adp():
 
 
 def test_tree_state_matches_recursive_oracle():
-    """M6 oracle: explicit recursive tree evaluation (vs the kernel's
-    flattened schedule)."""
-    r = _rows(1, seed=5)[0]
-    W = K.init_weights()
-    words, parents = r["win_words"], r["parents"]
-    n = len(words)
-    children = {u: [] for u in range(n + 1)}
-    for c, p in enumerate(parents):
-        children[p].append(c)
-
+    """M6 oracle: explicit recursive evaluation of the window's
+    dummy-rooted forest, row by row, against the batched kernel. The
+    batch repeats one sentence across windows at different offsets,
+    carries staged-shape copies (fresh lists, as rows arrive from
+    Arrow) and a chain-parents row whose parents are not
+    ``heads_of(words)``."""
     import sys
 
     sys.setrecursionlimit(10000)
+    W = K.init_weights()
+    shared = "the scan reads a table"
+    wins = [
+        ([shared], 0, 1, 0, 4),
+        (["fast row data", shared], 0, 1, 1, 4),
+        (["join the data", "row fast", shared], 0, 0, 2, 3),
+        ([shared, "data join"], 0, 2, 1, 1),
+    ]
+    rows = [K.featurize_window(t, s1, t1, s2, t2, 0) for t, s1, t1, s2, t2 in wins]
+    rows += _rows(4, seed=5)
+    rows += [{k: list(v) for k, v in r.items()} for r in rows]
+    chain = ["join", "the", "fast", "row", "data"]
+    rows.append(
+        {"win_words": chain, "parents": [5, 0, 1, 2, 3], "sdp_gidx": [4, 3, 2, 1, 0]}
+    )
 
-    def h_of(u):
-        acc = np.zeros(K.HIDDEN)
-        for c in children[u]:
-            acc += h_of(c)
-        x = K.word_vec(words[u]) if u < n else np.zeros(K.EMB_DIM)
-        return np.tanh(W["b_t"] + x @ W["W_hx_t"] + acc @ W["W_hh_t"])
+    def oracle(r):
+        words, parents = r["win_words"], r["parents"]
+        n = len(words)
+        children = {u: [] for u in range(n + 1)}
+        for c, p in enumerate(parents):
+            children[p].append(c)
 
-    expect = np.stack([h_of(g) for g in r["sdp_gidx"]]).mean(axis=0) @ W["W_tree_proj"]
-    np.testing.assert_allclose(K._tree_state(r, W), expect, rtol=1e-10, atol=1e-12)
+        def h_of(u):
+            acc = np.zeros(K.HIDDEN)
+            for c in children[u]:
+                acc += h_of(c)
+            x = K.word_vec(words[u]) if u < n else np.zeros(K.EMB_DIM)
+            return np.tanh(W["b_t"] + x @ W["W_hx_t"] + acc @ W["W_hh_t"])
+
+        states = np.stack([h_of(g) for g in r["sdp_gidx"]])
+        return states.mean(axis=0) @ W["W_tree_proj"]
+
+    got = K.tree_mean_states(rows, W) @ W["W_tree_proj"]
+    assert got.shape == (len(rows), K.FEAT_DIM)
+    for b, r in enumerate(rows):
+        np.testing.assert_allclose(got[b], oracle(r), rtol=1e-10, atol=1e-12)
+
+
+def test_tree_mean_states_rejects_a_head_pointing_right():
+    """The per-sentence levels come from a reverse scan that is only
+    right when every head lies left of its dependent inside one
+    sentence; any other parent array raises instead of scoring
+    silently wrong."""
+    W = K.init_weights()
+    for parents in (
+        [3, 2, 0],  # token 1's head lies right of it
+        [1, 3, 1],  # token 0 is not a sentence root
+        [4, 0, 4, 1],  # token 3's head lies in the previous sentence
+    ):
+        row = {"win_words": ["w"] * len(parents), "parents": parents, "sdp_gidx": [0]}
+        with pytest.raises(ValueError):
+            K.tree_mean_states([row], W)
 
 
 # ------------------------------------------------------------- hashing
@@ -395,50 +423,6 @@ def test_annotator_agreement_hand_computed_kappa(spark):
     assert const.kappa_e6 == 0
 
 
-def test_window_schedule_matches_tree_schedule():
-    """r6 optimization pin: the memoized per-sentence decomposition of
-    the ADP evaluation order must be list-for-list identical to the
-    window-level DFS it replaced (tree_mean_states' level derivation
-    and the bit-parity TreeRNN both consume it)."""
-    import random
-
-    from cross_sentence_relation_extraction_idepnn_spark import kernels
-
-    random.seed(11)
-    words = ["alpha", "beta", "tool", "run", "x1", "code", "omega", "k9"]
-    for _ in range(200):
-        sw = [
-            [random.choice(words) for _ in range(random.randint(1, 9))]
-            for _ in range(random.randint(1, 4))
-        ]
-        assert kernels.window_schedule(sw) == kernels.tree_schedule(
-            kernels.combined_parents(sw)
-        )
-
-
-def test_tree_arrays_cache_matches_fallback_levels():
-    """The per-window parent/level arrays a featurize_window row carries
-    must agree with the tree_order fallback used by the staged/Arrow
-    path."""
-    import numpy as np
-
-    from cross_sentence_relation_extraction_idepnn_spark import kernels
-
-    sw = [["alpha", "beta", "tool"], ["run", "x1", "code", "omega"]]
-    row = kernels.featurize_window([" ".join(w) for w in sw], 0, 1, 1, 2, 0)
-    parents, order = row["parents"], row["tree_order"]
-    parr, larr = row["tree_arrays"]
-    n = len(parents)
-    l = [0] * (n + 1)
-    for u in order:
-        if u < n:
-            pu = parents[u]
-            if pu < n and l[u] + 1 > l[pu]:
-                l[pu] = l[u] + 1
-    assert np.array_equal(parr, np.asarray(parents))
-    assert np.array_equal(larr, np.asarray(l[:n]))
-
-
 def test_kernel_memos_are_bounded():
     """Every executor-local memo is an lru_cache with a finite bound, so
     a long-lived Python worker cannot grow without limit."""
@@ -446,8 +430,7 @@ def test_kernel_memos_are_bounded():
 
     memos = [f for f in vars(kernels).values() if hasattr(f, "cache_info")]
     assert {f.__name__ for f in memos} >= {
-        "_h15w", "pos_tag", "word_vec", "heads_of", "_sentence_postorder",
-        "_window_structures",
+        "_h15w", "pos_tag", "word_vec", "heads_of", "_window_structures",
     }
     for f in memos:
         assert f.cache_info().maxsize is not None, f.__name__

@@ -262,7 +262,6 @@ def test_train_full_accepts_lr_strategy():
                 "pi_e1": list(range(n)),
                 "pi_e2": list(range(n))[::-1],
                 "parents": [n] + list(range(n - 1)),
-                "tree_order": list(range(n)) + [n],
             }
         )
         labels.append(lab)

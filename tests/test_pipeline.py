@@ -206,7 +206,7 @@ def test_fused_kernel_equals_staged_path(spark, sf_dir):
         .sort_values("cand_id")
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(fused, staged)
+    pd.testing.assert_frame_equal(fused, staged, check_exact=True)
 
 
 def test_spark_scoring_matches_numpy_oracle(spark, sf_dir):

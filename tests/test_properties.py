@@ -3,6 +3,7 @@ randomized counterparts of the hand-built unit tests."""
 
 from __future__ import annotations
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -39,9 +40,6 @@ def test_combined_parents_is_a_forest_rooted_at_dummy(sents):
             assert u not in seen
             seen.add(u)
             u = parents[u]
-    order = K.tree_schedule(parents)
-    pos = {u: i for i, u in enumerate(order)}
-    assert all(pos[c] < pos[p] for c, p in enumerate(parents))
 
 
 @settings(max_examples=60, deadline=None)
@@ -90,13 +88,39 @@ def test_featurize_window_tree_walk_equals_bfs(sents, data):
     n = sum(len(s) for s in sents)
     g1 = data.draw(st.integers(0, n - 1))
     g2 = data.draw(st.integers(0, n - 1))
-
-    def coords(g):
-        for si, s in enumerate(sents):
-            if g < len(s):
-                return si, g
-            g -= len(s)
-
-    (s1, t1), (s2, t2) = coords(g1), coords(g2)
+    (s1, t1), (s2, t2) = _coords(sents, g1), _coords(sents, g2)
     f = K.featurize_window(texts, s1, t1, s2, t2, 0)
     assert f["sdp_gidx"] == K.bfs_path(n, K.build_edges(sents)[0], g1, g2)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(sents_st, min_size=1, max_size=3), st.data())
+def test_tree_mean_states_is_batch_invariant(windows, data):
+    """A row's TreeRNN states do not depend on the rest of its batch
+    (which sentences it shares with other windows), nor on whether it
+    is a fused row (memoized window lists) or a staged copy (fresh
+    lists): both hold exactly."""
+    W = K.init_weights()
+    # each window's tail sentences recur at a new offset
+    windows = windows + [w[1:] for w in windows if len(w) > 1]
+    fused = []
+    for sents in windows:
+        n = sum(len(s) for s in sents)
+        g1 = data.draw(st.integers(0, n - 1))
+        g2 = data.draw(st.integers(0, n - 1))
+        (s1, t1), (s2, t2) = _coords(sents, g1), _coords(sents, g2)
+        fused.append(K.featurize_window([" ".join(s) for s in sents], s1, t1, s2, t2, 0))
+    staged = [{k: list(v) for k, v in r.items()} for r in fused]
+    batch = fused + staged
+    got = K.tree_mean_states(batch, W)
+    for b, r in enumerate(batch):
+        assert np.array_equal(got[b], K.tree_mean_states([r], W)[0])
+    assert np.array_equal(got[: len(fused)], got[len(fused) :])
+
+
+def _coords(sents, g):
+    """(sentence, token) of window-global token index ``g``."""
+    for si, s in enumerate(sents):
+        if g < len(s):
+            return si, g
+        g -= len(s)
