@@ -42,8 +42,14 @@ Reference semantics re-expressed:
 - M1–M7 (``rnn/elman_bidirection_RC.py``): embedding gather + feature
   concat, forward/backward Elman recurrences, bi-combiner
   ``tanh(h_f + h_b + h_bi W)``, softmax head. The reference scores one
-  example per Theano call; here every recurrence step is a batched
-  (B, d) matmul across the Arrow chunk.
+  example per Theano call, so a candidate's score depends on that
+  candidate alone. Here one live-prefix scan (``_scan``) runs every
+  recurrence: the bi-RNN's forward, backward and combiner chains, the
+  bi-LSTM's (M5), and the forward pass of BPTT training. Each step is
+  one matmul over the Arrow chunk's rows still running, longest first,
+  and every product that feeds ``p_rel`` gives a row the same bits
+  whatever else is in its batch (``_row_matmul``; ``einsum`` for the
+  head).
 
 Everything is float64 end-to-end (the reference mixes float64/float32 —
 ``tree_rnn.py:7`` — a latent inconsistency we do not copy).
@@ -398,65 +404,42 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-x))
 
 
-def _lstm_step(x, h, c, W, d):
-    """One peephole-LSTM step for direction d over a (B, ·) batch."""
-    i = _sigmoid(x @ W[f"W_xi_{d}"] + h @ W[f"W_hi_{d}"] + c * W[f"p_i_{d}"] + W[f"b_i_{d}"])
-    f = _sigmoid(x @ W[f"W_xf_{d}"] + h @ W[f"W_hf_{d}"] + c * W[f"p_f_{d}"] + W[f"b_f_{d}"])
-    c_new = f * c + i * np.tanh(x @ W[f"W_xc_{d}"] + h @ W[f"W_hc_{d}"] + W[f"b_c_{d}"])
-    o = _sigmoid(x @ W[f"W_xo_{d}"] + h @ W[f"W_ho_{d}"] + c_new * W[f"p_o_{d}"] + W[f"b_o_{d}"])
-    return o * np.tanh(c_new), c_new
+def _lstm(W: dict[str, np.ndarray], d: str):
+    """Peephole-LSTM step for direction d, state (h, c), for :func:`_scan`."""
+    def mm(a, key):
+        return _row_matmul(a, W[key])
+
+    def step(x, h, c):
+        i = _sigmoid(mm(x, f"W_xi_{d}") + mm(h, f"W_hi_{d}") + c * W[f"p_i_{d}"] + W[f"b_i_{d}"])
+        f = _sigmoid(mm(x, f"W_xf_{d}") + mm(h, f"W_hf_{d}") + c * W[f"p_f_{d}"] + W[f"b_f_{d}"])
+        c_new = f * c + i * np.tanh(mm(x, f"W_xc_{d}") + mm(h, f"W_hc_{d}") + W[f"b_c_{d}"])
+        o = _sigmoid(
+            mm(x, f"W_xo_{d}") + mm(h, f"W_ho_{d}") + c_new * W[f"p_o_{d}"] + W[f"b_o_{d}"]
+        )
+        return o * np.tanh(c_new), c_new
+
+    return step
 
 
 def feature_batch_lstm(rows: list[dict], W: dict[str, np.ndarray]) -> np.ndarray:
     """Bi-LSTM features → (B, HIDDEN): forward + backward peephole LSTM
-    over the SDP, combined by ``tanh(h_f W_f + h_b W_b + h_bi W_hh + b)``.
-    Same batched-matmul vectorization as the Elman kernel."""
+    over the SDP, combined by ``tanh([h_f h_b] [W_f; W_b] + h_bi W_hh + b)``.
+    The same scan as the Elman kernel runs all three chains."""
     B = len(rows)
     if B == 0:
         return np.zeros((0, HIDDEN))
-    X, lens, mask = build_inputs(rows)
-    L = X.shape[1]
-    h_f = np.zeros((B, L, HIDDEN))
-    h = np.zeros((B, HIDDEN))
-    c = np.zeros((B, HIDDEN))
-    for t in range(L):
-        m = mask[:, t : t + 1]
-        h_new, c_new = _lstm_step(X[:, t], h, c, W, "f")
-        h = m * h_new + (1 - m) * h
-        c = m * c_new + (1 - m) * c
-        h_f[:, t] = h
-    h_b = np.zeros((B, L, HIDDEN))
-    h = np.zeros((B, HIDDEN))
-    c = np.zeros((B, HIDDEN))
-    ar = np.arange(B)
-    for step in range(L):
-        t_idx = lens - 1 - step
-        valid = (t_idx >= 0).astype(np.float64)[:, None]
-        t_safe = np.clip(t_idx, 0, L - 1)
-        x_t = X[ar, t_safe]
-        h_new, c_new = _lstm_step(x_t, h, c, W, "b")
-        h = valid * h_new + (1 - valid) * h
-        c = valid * c_new + (1 - valid) * c
-        h_b[ar, t_safe] = np.where(valid > 0, h, h_b[ar, t_safe])
-    h_bi = np.zeros((B, HIDDEN))
-    for t in range(L):
-        m = mask[:, t : t + 1]
-        z = np.tanh(
-            h_f[:, t] @ W["W_f_bi"] + h_b[:, t] @ W["W_b_bi"] + h_bi @ W["W_hh_bi"] + W["b_bi"]
-        )
-        h_bi = m * z + (1 - m) * h_bi
-    return h_bi
+    X, lens, order = build_inputs(rows)
+    H_f = _scan(_lstm(W, "f"), X, lens, n_state=2)
+    H_r = _scan(_lstm(W, "b"), reverse_steps(X, lens), lens, n_state=2)
+    H_fb = np.concatenate([H_f, reverse_steps(H_r, lens)], axis=2)
+    W_fb = np.vstack([W["W_f_bi"], W["W_b_bi"]])
+    H_bi = _scan(_elman(W["W_hh_bi"], W["b_bi"], W_fb), H_fb, lens)
+    return _last_steps(H_bi, lens, order)
 
 
 def score_batch_lstm(rows: list[dict], W: dict[str, np.ndarray]) -> np.ndarray:
     """Bi-LSTM variant of :func:`score_batch` → (B, 2) probabilities."""
-    feats = feature_batch_lstm(rows, W)
-    if len(rows) == 0:
-        return np.zeros((0, N_CLASSES))
-    logits = feats @ W["W_hy"] + W["b_y"]
-    logits -= logits.max(axis=1, keepdims=True)
-    e = np.exp(logits)
-    return e / e.sum(axis=1, keepdims=True)
+    return softmax_head(feature_batch_lstm(rows, W), W, use_adp=False)
 
 
 def weights_to_lists(w: dict[str, np.ndarray]) -> dict[str, list]:
@@ -566,8 +549,10 @@ def build_inputs(
     rows: list[dict], use_ent_pres: bool = False
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """M1/M2/M11–M13 input assembly: rows → (X (B,L,xdim), lens (B,),
-    mask (B,L)). Shared by inference and BPTT training so both see
-    bit-identical inputs.
+    order (B,)). Row b of X is ``rows[order[b]]``: rows come longest
+    first (a stable sort), the order :func:`_scan` needs, and X is zero
+    past each row's end. Shared by inference and BPTT training so both
+    see bit-identical inputs.
 
     ``use_ent_pres=True`` (M12 consumption, the reference's
     ``augment_entity_presence`` mode) appends the raw 2-bit
@@ -582,7 +567,9 @@ def build_inputs(
     iob_t = iob_vec_table()
     pi_t = pi_vec_table()
     lens = np.array([len(r["sdp_words"]) for r in rows], dtype=np.int64)
-    L = int(lens.max()) if B else 0
+    order = np.argsort(-lens, kind="stable")
+    lens = lens[order]
+    L = int(lens[0]) if B else 0
     wid = np.zeros((B, L), dtype=np.int64)
     pi1 = np.zeros((B, L), dtype=np.int64)
     pi2 = np.zeros((B, L), dtype=np.int64)
@@ -592,7 +579,8 @@ def build_inputs(
     setdefault = vocab.setdefault
     ep1 = np.zeros((B, L), dtype=np.float64) if use_ent_pres else None
     ep2 = np.zeros((B, L), dtype=np.float64) if use_ent_pres else None
-    for b, r in enumerate(rows):
+    for b, i in enumerate(order):
+        r = rows[i]
         n = int(lens[b])
         wid[b, :n] = [setdefault(w.lower(), len(vocab)) for w in r["sdp_words"]]
         pi1[b, :n] = r["pi_e1"]
@@ -612,9 +600,70 @@ def build_inputs(
     if use_ent_pres:
         channels += [ep1[:, :, None], ep2[:, :, None]]
     X = np.concatenate(channels, axis=2)
-    mask = (np.arange(L)[None, :] < lens[:, None]).astype(np.float64)
-    X *= mask[:, :, None]  # zero padded steps (bit-parity with loop form)
-    return X, lens, mask
+    X *= (np.arange(L)[None, :] < lens[:, None])[:, :, None]
+    return X, lens, order
+
+
+def _scan(step, X: np.ndarray, lens: np.ndarray, n_state: int = 1) -> np.ndarray:
+    """The kernel's one time-step loop. ``X`` (B, L, ·) holds rows
+    sorted longest first with lengths ``lens``, so the rows still
+    running at step t are a prefix: step t calls ``step(X[:k, t],
+    *state[:k])`` on those k rows alone, and a finished row is never
+    touched again. ``step`` returns the new state tuple, output first;
+    the state starts at zero. → every step's output (B, L, HIDDEN),
+    zero past each row's end."""
+    B, L = X.shape[:2]
+    out = np.zeros((B, L, HIDDEN))
+    state = [np.zeros((B, HIDDEN)) for _ in range(n_state)]
+    for t, k in enumerate(np.count_nonzero(lens[:, None] > np.arange(L), axis=0)):
+        new = step(X[:k, t], *[s[:k] for s in state])
+        for s, v in zip(state, new):
+            s[:k] = v
+        out[:k, t] = new[0]
+    return out
+
+
+def _elman(U: np.ndarray, b: np.ndarray, Wx: np.ndarray | None = None):
+    """Elman step ``tanh(x Wx + h U + b)`` for :func:`_scan`; without
+    ``Wx`` the input arrives projected."""
+    def step(x, h):
+        if Wx is not None:
+            x = _row_matmul(x, Wx)
+        return (np.tanh(x + _row_matmul(h, U) + b),)
+
+    return step
+
+
+def reverse_steps(A: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Each row of ``A`` (B, L, ·) read back to front over its first
+    ``lens[b]`` steps, zero past them: step s holds step lens[b]-1-s.
+    The backward chains run forward over this; it is its own inverse."""
+    idx = lens[:, None] - 1 - np.arange(A.shape[1])
+    out = np.take_along_axis(A, np.maximum(idx, 0)[:, :, None], axis=1)
+    out *= (idx >= 0)[:, :, None]
+    return out
+
+
+def birnn_states(
+    X: np.ndarray, lens: np.ndarray, W: dict[str, np.ndarray]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """M3/M4 states at every step of length-sorted inputs
+    (:func:`build_inputs`) → (H_f, H_r, H_bi), each (B, L, HIDDEN) and
+    zero past each row's end. ``H_r`` is the backward chain in its own
+    time (step s reads token lens-1-s); the bi-combiner ``h_bi_t =
+    tanh(h_f_t + h_b_t + h_bi_{t-1} W + b)`` reads it in token order.
+    Inference keeps each row's last ``H_bi``; BPTT reads all three."""
+    H_f = _scan(_elman(W["W_hh_f"], W["b_f"], W["W_xh_f"]), X, lens)
+    H_r = _scan(_elman(W["W_hh_b"], W["b_b"], W["W_xh_b"]), reverse_steps(X, lens), lens)
+    H_bi = _scan(_elman(W["W_hh_bi"], W["b_bi"]), H_f + reverse_steps(H_r, lens), lens)
+    return H_f, H_r, H_bi
+
+
+def _last_steps(H: np.ndarray, lens: np.ndarray, order: np.ndarray) -> np.ndarray:
+    """Each row's state at its last step, back in the caller's row order."""
+    out = np.empty((len(H), HIDDEN))
+    out[order] = H[np.arange(len(H)), lens - 1]
+    return out
 
 
 def feature_batch(
@@ -625,78 +674,25 @@ def feature_batch(
 ) -> np.ndarray:
     """Batched iDepNN recurrent features → (B, HIDDEN[+FEAT_DIM]).
 
-    Pads SDP sequences to the batch max length; every timestep is one
-    (B, xdim) @ (xdim, H) matmul — the vectorization the reference
-    lacks (minibatch=1, elman-bidirection.py:910-2484).
+    A row's features are the same bits whatever else is in its batch,
+    as if the row were scored alone like the reference's minibatch=1
+    (elman-bidirection.py:910-2484): Spark picks the Arrow batches, so
+    a score that moved with them would differ between runs.
     """
     B = len(rows)
     if B == 0:
         return np.zeros((0, HIDDEN + (FEAT_DIM if use_adp else 0)))
-    X, lens, mask = build_inputs(rows, use_ent_pres=use_ent_pres)
-    L = X.shape[1]
-
-    # Length-sorted active-prefix evaluation (r6, guide §1.2 step 2 —
-    # per-task work): rows sorted by sequence length DESC, so at step t
-    # exactly the first k_t rows are still live and every timestep op
-    # runs on a [:k_t] slice instead of the full padded batch. The mask
-    # semantics froze finished rows anyway (their h never changed), so
-    # slicing them out is value-identical — each row's recurrence only
-    # ever reads that row's own state. Measured: the padded form spent
-    # ~2.3× the live work (mean len 4.3 vs padded 10) plus two fancy-
-    # gather ops per backward step; this form removes both.
-    order = np.argsort(-lens, kind="stable")
-    inv = np.empty(B, dtype=np.int64)
-    inv[order] = np.arange(B)
-    Xs = np.ascontiguousarray(X[order])
-    ls = lens[order]
-    # k_arr[t] = number of rows with len > t (sorted desc → live prefix)
-    k_arr = (ls[:, None] > np.arange(L)[None, :]).sum(axis=0)
-
-    W = weights
-    h_f = np.zeros((B, L, HIDDEN))
-    h = np.zeros((B, HIDDEN))
-    for t in range(L):
-        k = int(k_arr[t])
-        if k == 0:
-            break
-        hk = np.tanh(
-            Xs[:k, t] @ W["W_xh_f"] + h[:k] @ W["W_hh_f"] + W["b_f"]
-        )
-        h[:k] = hk
-        h_f[:k, t] = hk
-    # backward pass: reverse each row's VALID prefix once (single
-    # vectorized gather), run the same live-prefix loop, gather back.
-    # rev_idx is an involution (t ↔ len-1-t), so one index array maps
-    # both directions; padded steps are zeroed after the gather-back.
-    rev_idx = ls[:, None] - 1 - np.arange(L)[None, :]
-    rev_safe = np.clip(rev_idx, 0, L - 1)[:, :, None]
-    Xr = np.take_along_axis(Xs, rev_safe, axis=1)
-    h_r = np.zeros((B, L, HIDDEN))
-    h = np.zeros((B, HIDDEN))
-    for s in range(L):
-        k = int(k_arr[s])
-        if k == 0:
-            break
-        hk = np.tanh(
-            Xr[:k, s] @ W["W_xh_b"] + h[:k] @ W["W_hh_b"] + W["b_b"]
-        )
-        h[:k] = hk
-        h_r[:k, s] = hk
-    h_b = np.take_along_axis(h_r, rev_safe, axis=1)
-    h_b *= (rev_idx >= 0)[:, :, None]
-    # bi-combiner: h_bi_t = tanh(h_f_t + h_b_t + h_bi_{t-1} W)
-    h_bi = np.zeros((B, HIDDEN))
-    for t in range(L):
-        k = int(k_arr[t])
-        if k == 0:
-            break
-        h_bi[:k] = np.tanh(
-            h_f[:k, t] + h_b[:k, t] + h_bi[:k] @ W["W_hh_bi"] + W["b_bi"]
-        )
-    h_bi = h_bi[inv]
-
+    X, lens, order = build_inputs(rows, use_ent_pres=use_ent_pres)
+    # Every chain is one live-prefix scan over the length-sorted rows:
+    # step t runs one matmul over the k_t rows still running, not the
+    # padded batch (the padded form spent ~2.3x the live work, mean
+    # length 4.3 against a padded 10). Each row reads only its own
+    # state, and every product goes through _row_matmul, whose rows do
+    # not depend on k_t for these shapes: so neither the batch's other
+    # rows nor its longest length reach a row's bits.
+    h_bi = _last_steps(birnn_states(X, lens, weights)[2], lens, order)
     if use_adp:
-        tree_feat = tree_mean_states(rows, W) @ W["W_tree_proj"]
+        tree_feat = _row_matmul(tree_mean_states(rows, weights), weights["W_tree_proj"])
         return np.concatenate([h_bi, tree_feat], axis=1)
     return h_bi
 
@@ -704,7 +700,11 @@ def feature_batch(
 def _row_matmul(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """``a @ b`` whose every row is the same whatever ``a``'s row count:
     numpy hands a one-row product to BLAS gemv, which rounds unlike the
-    gemm that serves two rows or more."""
+    gemm that serves two rows or more. Checked against row counts 1–9,
+    16, 33, 100 and 2048 on OpenBLAS 0.3.23 (1 and 2 threads) for the
+    kernel's shapes K×N = 16×16, 16×5, 32×16, 36×16 and 38×16. It does
+    not hold for N = 2: gemm's rows there change with the row count
+    (at 1, 2, 3, 5, 6, 7, 9 and 33 rows), so the head uses ``einsum``."""
     if len(a) == 1:
         return (np.concatenate([a, a]) @ b)[:1]
     return a @ b
@@ -804,9 +804,10 @@ def tree_mean_states(rows: list[dict], W: dict[str, np.ndarray]) -> np.ndarray:
 
 
 def softmax_head(feats: np.ndarray, W: dict[str, np.ndarray], use_adp: bool = True) -> np.ndarray:
-    """M7: softmax over the head weights; (B, n_feat) → (B, 2) probs."""
-    key = "W_hy_adp" if use_adp else "W_hy"
-    logits = feats @ W[key] + W["b_y"]
+    """M7: softmax over the head weights; (B, n_feat) → (B, 2) probs.
+    ``einsum`` keeps each row's logits independent of the row count,
+    which BLAS does not for two output columns (see :func:`_row_matmul`)."""
+    logits = np.einsum("bi,ij->bj", feats, W["W_hy_adp" if use_adp else "W_hy"]) + W["b_y"]
     logits -= logits.max(axis=1, keepdims=True)
     e = np.exp(logits)
     return e / e.sum(axis=1, keepdims=True)
@@ -820,8 +821,6 @@ def score_batch(
 ) -> np.ndarray:
     """Batched iDepNN forward pass → (B, 2) class probabilities."""
     feats = feature_batch(rows, weights, use_adp=use_adp, use_ent_pres=use_ent_pres)
-    if len(rows) == 0:
-        return np.zeros((0, N_CLASSES))
     return softmax_head(feats, weights, use_adp=use_adp)
 
 

@@ -139,6 +139,28 @@ def shift_positions(featurized: DataFrame) -> DataFrame:
     )
 
 
+def featurize_rows(pdf: pd.DataFrame, tokenizer: str) -> list[dict | None]:
+    """``kernels.featurize_window`` over each window row of an Arrow
+    batch (``wtexts``, ``sent1``, ``tok1``, ``sent2``, ``tok2``,
+    ``smin``); None marks a row to quarantine. ``tokenizer`` is the T2
+    gate: ``'split'`` or ``'treebank'``."""
+    tokenize = None
+    if tokenizer == "treebank":
+        from .segmentation import treebank_tokenize as tokenize
+    return [
+        kernels.featurize_window(
+            list(r.wtexts),
+            int(r.sent1),
+            int(r.tok1),
+            int(r.sent2),
+            int(r.tok2),
+            int(r.smin),
+            tokenize=tokenize,
+        )
+        for r in pdf.itertuples(index=False)
+    ]
+
+
 def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
     """candidate windows → feature arrays (+ ``ok`` quarantine flag).
     ``tokenizer`` mirrors the fused kernel's T2 gate (``'split'`` |
@@ -153,9 +175,6 @@ def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tokenize = None
-        if tokenizer == "treebank":
-            from .segmentation import treebank_tokenize as tokenize
         empty = {
             "sdp_gidx": None,
             "sdp_words": None,
@@ -170,22 +189,13 @@ def featurize_pair(windows: DataFrame, tokenizer: str = "split") -> DataFrame:
         }
         for pdf in batches:
             feats = []
-            for row in pdf.itertuples(index=False):
-                f = kernels.featurize_window(
-                    list(row.wtexts),
-                    int(row.sent1),
-                    int(row.tok1),
-                    int(row.sent2),
-                    int(row.tok2),
-                    int(row.smin),
-                    tokenize=tokenize,
-                )
+            for f, s1, s2 in zip(
+                featurize_rows(pdf, tokenizer), pdf["e1_surface"], pdf["e2_surface"]
+            ):
                 if f is None:
                     feats.append({"ok": False, **empty})
                 else:
-                    f1, f2 = kernels.entity_presence_flags(
-                        f["sdp_words"], str(row.e1_surface), str(row.e2_surface)
-                    )
+                    f1, f2 = kernels.entity_presence_flags(f["sdp_words"], str(s1), str(s2))
                     feats.append(
                         {"ok": True, **f, "ent_pres_e1": f1, "ent_pres_e2": f2}
                     )

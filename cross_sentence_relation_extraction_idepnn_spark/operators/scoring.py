@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import PREDICATE, SCORE_THRESHOLD
+from .graph import featurize_rows
 
 
 FEATURE_COLS = [
@@ -56,7 +57,6 @@ PASSTHROUGH_COLS = [
 def score_pairs(
     featurized: DataFrame,
     weights=None,
-    use_adp: bool = True,
     keep_cols: list[str] | None = None,
     emit_second: bool = False,
     use_ent_pres: bool = False,
@@ -105,9 +105,7 @@ def score_pairs(
                 {k: list(getattr(r, k)) for k in feat_cols}
                 for r in pdf.itertuples(index=False)
             ]
-            probs = kernels.score_batch(
-                rows, W, use_adp=use_adp, use_ent_pres=use_ent_pres
-            )
+            probs = kernels.score_batch(rows, W, use_ent_pres=use_ent_pres)
             out = pdf[keep_cols].reset_index(drop=True).copy()
             out["y_pred"] = probs.argmax(axis=1).astype("int32")
             out["p_rel"] = probs[:, 1]
@@ -121,7 +119,6 @@ def score_pairs(
 def featurize_and_score(
     windows: DataFrame,
     weights=None,
-    use_adp: bool = True,
     keep_cols: list[str] | None = None,
     tokenizer: str = "split",
 ) -> DataFrame:
@@ -156,26 +153,11 @@ def featurize_and_score(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        tokenize = None
-        if tokenizer == "treebank":  # T2 punkt/treebank gated mode
-            from ..operators.segmentation import treebank_tokenize as tokenize
-
         W = kernels.weights_from_lists(bweights.value)
         for pdf in batches:
-            feats = [
-                kernels.featurize_window(
-                    list(r.wtexts),
-                    int(r.sent1),
-                    int(r.tok1),
-                    int(r.sent2),
-                    int(r.tok2),
-                    int(r.smin),
-                    tokenize=tokenize,
-                )
-                for r in pdf.itertuples(index=False)
-            ]
+            feats = featurize_rows(pdf, tokenizer)
             ok_rows = [f for f in feats if f is not None]
-            probs = kernels.score_batch(ok_rows, W, use_adp=use_adp)
+            probs = kernels.score_batch(ok_rows, W)
             out = pdf[keep_cols].reset_index(drop=True).copy()
             ok = np.array([f is not None for f in feats])
             y = np.zeros(len(feats), dtype="int32")

@@ -10,7 +10,10 @@ once, single-node, and ships frozen weights.
 forward/backward Elman recurrences and the bi-combiner (M3/M4), plus
 the softmax head (M7) and the linear ADP projection, on NLL + L2 with
 global gradient-norm clipping — the reference's cost/update family
-vectorized across the whole batch instead of minibatch=1. The word/
+vectorized across the whole batch instead of minibatch=1. Its forward
+pass is the inference scan itself (``kernels.birnn_states``), and BPTT
+reads that scan's states, so training differentiates the very states
+that scoring computes. The word/
 POS/IOB/PI embeddings and the TreeRNN recurrent weights stay at their
 deterministic frozen values (embeddings are hash-derived dimension
 tables here, so the reference's post-step embedding row-normalization
@@ -63,27 +66,19 @@ def train_head(
     feats: np.ndarray, labels: np.ndarray, base: dict[str, np.ndarray]
 ) -> dict[str, np.ndarray]:
     """Full-batch NLL + L2 gradient descent on (W_hy_adp, b_y)."""
-    n, d = feats.shape
-    W = base["W_hy_adp"].copy()
-    b = base["b_y"].copy()
+    n = len(feats)
+    out = dict(base, W_hy_adp=base["W_hy_adp"].copy(), b_y=base["b_y"].copy())
     onehot = np.eye(kernels.N_CLASSES)[labels]
     for _ in range(EPOCHS):
-        logits = feats @ W + b
-        logits -= logits.max(axis=1, keepdims=True)
-        e = np.exp(logits)
-        p = e / e.sum(axis=1, keepdims=True)
-        gl = (p - onehot) / n
-        gW = feats.T @ gl + L2 * W
+        gl = (kernels.softmax_head(feats, out) - onehot) / n
+        gW = feats.T @ gl + L2 * out["W_hy_adp"]
         gb = gl.sum(axis=0)
         norm = float(np.sqrt((gW**2).sum() + (gb**2).sum()))
         if norm > CLIP:  # M9 gradient-norm cutoff
             gW *= CLIP / norm
             gb *= CLIP / norm
-        W -= LR * gW
-        b -= LR * gb
-    out = dict(base)
-    out["W_hy_adp"] = W
-    out["b_y"] = b
+        out["W_hy_adp"] -= LR * gW
+        out["b_y"] -= LR * gb
     return out
 
 
@@ -95,52 +90,24 @@ TRAINED = [
 ]
 
 
-def _reversed_inputs(X: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Xr[b, s] = X[b, lens[b]-1-s] for s < lens[b], else 0 — the
-    backward recurrence runs forward over Xr (identical numbers to the
-    inference kernel's per-row index-gather form)."""
-    B, L, D = X.shape
-    Xr = np.zeros_like(X)
-    ar = np.arange(L)
-    for b in range(B):
-        n = int(lens[b])
-        Xr[b, :n] = X[b, ar[:n][::-1]]
-    return Xr
-
-
-def _fwd_chain(inp, mask, U, b_vec):
-    """Masked Elman recurrence over precomputed per-step inputs
-    ``inp (B,L,H_or_x@W)``; returns (states H, tanh outputs T)."""
-    B, L, H = inp.shape[0], inp.shape[1], U.shape[0]
-    Hs = np.zeros((B, L, H))
-    Ts = np.zeros((B, L, H))
-    h = np.zeros((B, H))
-    for t in range(L):
-        m = mask[:, t : t + 1]
-        z = np.tanh(inp[:, t] + h @ U + b_vec)
-        Ts[:, t] = z
-        h = m * z + (1 - m) * h
-        Hs[:, t] = h
-    return Hs, Ts
-
-
-def _bwd_chain(dH_ext, mask, Hs, Ts, U):
-    """BPTT through a masked Elman chain. ``dH_ext[:, t]`` is the
-    external gradient into h_t. Returns (dinp (B,L,H), dU, db)."""
+def _bwd_chain(dH_ext, Hs, U):
+    """BPTT through an Elman chain whose states ``Hs`` come from
+    ``kernels.birnn_states``: the tanh output at every valid step, zero
+    past a row's end, where ``dH_ext`` (the external gradient into
+    h_t) is zero too, so no gradient reaches those steps. Returns
+    (dinp (B,L,H), dU, db)."""
     B, L, H = dH_ext.shape
     dinp = np.zeros((B, L, H))
     dU = np.zeros_like(U)
     db = np.zeros(H)
     carry = np.zeros((B, H))
     for t in range(L - 1, -1, -1):
-        g = dH_ext[:, t] + carry
-        m = mask[:, t : t + 1]
-        dz = g * m * (1 - Ts[:, t] ** 2)
-        h_prev = Hs[:, t - 1] if t > 0 else np.zeros((B, H))
-        dU += h_prev.T @ dz
+        dz = (dH_ext[:, t] + carry) * (1 - Hs[:, t] ** 2)
+        if t:
+            dU += Hs[:, t - 1].T @ dz
         db += dz.sum(axis=0)
         dinp[:, t] = dz
-        carry = dz @ U.T + g * (1 - m)
+        carry = dz @ U.T
     return dinp, dU, db
 
 
@@ -232,40 +199,23 @@ def train_full(
     (O2 best-epoch selection + early stop,
     ``elman-bidirection.py:2527-2533,2584-2589``)."""
     W = {k: v.copy() for k, v in base.items()}
-    X, lens, mask = kernels.build_inputs(rows)
-    Xr = _reversed_inputs(X, lens)
-    mask_r = mask  # same shape: s < lens[b]
-    B, L, _ = X.shape
-    S_mean = kernels.tree_mean_states(rows, W)  # frozen tree features
+    # rows in the scan's order (longest first) throughout
+    X, lens, order = kernels.build_inputs(rows)
+    Xr = kernels.reverse_steps(X, lens)
+    labels = np.asarray(labels)[order]
+    B = len(labels)
+    S_mean = kernels.tree_mean_states(rows, W)[order]  # frozen tree features
     onehot = np.eye(kernels.N_CLASSES)[labels]
     ar = np.arange(B)
     last_t = lens - 1
     H = kernels.HIDDEN
 
-    # valid (b, s) pairs and their original-index positions for the
-    # h_b scatter/gather: t = lens[b]-1-s
-    bidx, sidx = np.nonzero(mask > 0)
-    tidx = lens[bidx] - 1 - sidx
-
     best_dev_nll, best_W, stale, best_epoch = np.inf, None, 0, 0
 
     for epoch in range(epochs):
-        inp_f = X @ W["W_xh_f"]
-        Hf, Tf = _fwd_chain(inp_f, mask, W["W_hh_f"], W["b_f"])
-        inp_b = Xr @ W["W_xh_b"]
-        Hb_rev, Tb_rev = _fwd_chain(inp_b, mask_r, W["W_hh_b"], W["b_b"])
-        # h_b in original index space (valid positions only)
-        Hb = np.zeros_like(Hb_rev)
-        Hb[bidx, tidx] = Hb_rev[bidx, sidx]
-        inp_bi = Hf + Hb
-        Hbi, Tbi = _fwd_chain(inp_bi, mask, W["W_hh_bi"], W["b_bi"])
-        h_final = Hbi[ar, last_t]
-        tree_feat = S_mean @ W["W_tree_proj"]
-        feats = np.concatenate([h_final, tree_feat], axis=1)
-        logits = feats @ W["W_hy_adp"] + W["b_y"]
-        logits -= logits.max(axis=1, keepdims=True)
-        e = np.exp(logits)
-        p = e / e.sum(axis=1, keepdims=True)
+        Hf, Hr, Hbi = kernels.birnn_states(X, lens, W)
+        feats = np.concatenate([Hbi[ar, last_t], S_mean @ W["W_tree_proj"]], axis=1)
+        p = kernels.softmax_head(feats, W)
 
         # ---- backward
         dlogits = (p - onehot) / B
@@ -279,19 +229,17 @@ def train_full(
 
         dHbi_ext = np.zeros_like(Hbi)
         dHbi_ext[ar, last_t] = dh_final
-        dinp_bi, dU_bi, db_bi = _bwd_chain(dHbi_ext, mask, Hbi, Tbi, W["W_hh_bi"])
+        dinp_bi, dU_bi, db_bi = _bwd_chain(dHbi_ext, Hbi, W["W_hh_bi"])
         g["W_hh_bi"] = dU_bi + l2 * W["W_hh_bi"]
         g["b_bi"] = db_bi
 
-        dinp_f, dU_f, db_f = _bwd_chain(dinp_bi, mask, Hf, Tf, W["W_hh_f"])
+        dinp_f, dU_f, db_f = _bwd_chain(dinp_bi, Hf, W["W_hh_f"])
         g["W_xh_f"] = np.einsum("blx,blh->xh", X, dinp_f) + l2 * W["W_xh_f"]
         g["W_hh_f"] = dU_f + l2 * W["W_hh_f"]
         g["b_f"] = db_f
 
-        # scatter dh_b (original space) into reversed space
-        dHb_rev_ext = np.zeros_like(Hb_rev)
-        dHb_rev_ext[bidx, sidx] = dinp_bi[bidx, tidx]
-        dinp_br, dU_b, db_b = _bwd_chain(dHb_rev_ext, mask_r, Hb_rev, Tb_rev, W["W_hh_b"])
+        # h_b's gradient, read back into the backward chain's time
+        dinp_br, dU_b, db_b = _bwd_chain(kernels.reverse_steps(dinp_bi, lens), Hr, W["W_hh_b"])
         g["W_xh_b"] = np.einsum("blx,blh->xh", Xr, dinp_br) + l2 * W["W_xh_b"]
         g["W_hh_b"] = dU_b + l2 * W["W_hh_b"]
         g["b_b"] = db_b

@@ -151,16 +151,18 @@ def test_score_batch_prob_simplex():
 
 def test_score_batch_order_and_padding_invariance():
     """Batching across variable-length SDPs must not change per-row
-    scores: score each row alone vs in one padded batch, and in
-    permuted order."""
+    features or scores by a single bit: score each row alone vs in one
+    padded batch, and in permuted order."""
     rows = _rows(5, seed=1)
     W = K.init_weights()
+    feats = K.feature_batch(rows, W)
+    assert np.array_equal(feats, np.vstack([K.feature_batch([r], W) for r in rows]))
     batched = K.score_batch(rows, W)
     solo = np.vstack([K.score_batch([r], W) for r in rows])
-    np.testing.assert_allclose(batched, solo, rtol=1e-12, atol=1e-12)
+    assert np.array_equal(batched, solo)
     perm = [3, 0, 4, 1, 2]
     permuted = K.score_batch([rows[i] for i in perm], W)
-    np.testing.assert_allclose(permuted, batched[perm], rtol=1e-12, atol=1e-12)
+    assert np.array_equal(permuted, batched[perm])
 
 
 def test_forward_pass_matches_loop_oracle_no_adp():

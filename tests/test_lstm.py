@@ -33,7 +33,9 @@ def test_lstm_probs_simplex_and_batch_invariance():
     assert p.shape == (5, 2)
     assert np.allclose(p.sum(axis=1), 1.0)
     solo = np.vstack([K.score_batch_lstm([r], W) for r in rows])
-    np.testing.assert_allclose(p, solo, rtol=1e-12, atol=1e-12)
+    assert np.array_equal(p, solo)
+    feats = K.feature_batch_lstm(rows, W)
+    assert np.array_equal(feats, np.vstack([K.feature_batch_lstm([r], W) for r in rows]))
 
 
 def test_lstm_matches_loop_oracle():

@@ -182,7 +182,8 @@ def test_fast_triples_are_deterministic(spark, sf_dir):
 
 def test_fused_kernel_equals_staged_path(spark, sf_dir):
     """featurize_and_score (fused Arrow kernel) must emit the same
-    (candidate, score) set as featurize_pair → score_pairs."""
+    (candidate, score) set as featurize_pair → score_pairs, bit for
+    bit, even when the staged side sees other Arrow batches."""
     from cross_sentence_relation_extraction_idepnn_spark.operators.scoring import (
         featurize_and_score,
     )
@@ -199,13 +200,19 @@ def test_fused_kernel_equals_staged_path(spark, sf_dir):
         .sort_values("cand_id")
         .reset_index(drop=True)
     )
-    staged = (
-        score_pairs(featurize_pair(wins).filter("ok"), weights=W, keep_cols=["cand_id"])
-        .select("cand_id", "p_rel")
-        .toPandas()
-        .sort_values("cand_id")
-        .reset_index(drop=True)
-    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        staged = (
+            score_pairs(featurize_pair(wins).filter("ok"), weights=W, keep_cols=["cand_id"])
+            .select("cand_id", "p_rel")
+            .toPandas()
+            .sort_values("cand_id")
+            .reset_index(drop=True)
+        )
+    finally:
+        spark.conf.set(key, prev)
     pd.testing.assert_frame_equal(fused, staged, check_exact=True)
 
 

@@ -96,10 +96,11 @@ def test_featurize_window_tree_walk_equals_bfs(sents, data):
 @settings(max_examples=60, deadline=None)
 @given(st.lists(sents_st, min_size=1, max_size=3), st.data())
 def test_tree_mean_states_is_batch_invariant(windows, data):
-    """A row's TreeRNN states do not depend on the rest of its batch
-    (which sentences it shares with other windows), nor on whether it
-    is a fused row (memoized window lists) or a staged copy (fresh
-    lists): both hold exactly."""
+    """A row's TreeRNN states and scores do not depend on the rest of
+    its batch (which sentences it shares with other windows, how long
+    the other SDPs are), nor do its states depend on whether it is a
+    fused row (memoized window lists) or a staged copy (fresh lists):
+    both hold exactly."""
     W = K.init_weights()
     # each window's tail sentences recur at a new offset
     windows = windows + [w[1:] for w in windows if len(w) > 1]
@@ -113,8 +114,10 @@ def test_tree_mean_states_is_batch_invariant(windows, data):
     staged = [{k: list(v) for k, v in r.items()} for r in fused]
     batch = fused + staged
     got = K.tree_mean_states(batch, W)
+    probs = K.score_batch(batch, W)
     for b, r in enumerate(batch):
         assert np.array_equal(got[b], K.tree_mean_states([r], W)[0])
+        assert np.array_equal(probs[b], K.score_batch([r], W)[0])
     assert np.array_equal(got[: len(fused)], got[len(fused) :])
 
 
